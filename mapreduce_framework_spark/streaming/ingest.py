@@ -37,19 +37,34 @@ appended to the index.
 The reference has no streaming surface (batch-only, hard map→reduce
 barrier, src/mr/coordinator.go:143-155); this is [EXT] (SURVEY §7 M5).
 
-Four admission sinks share the lifecycle: the single-tier MinHash sink
-(``make_ingest_batch_fn``), its semantic-embedding twin
-(``make_semantic_ingest_batch_fn``), the TIERED CASCADE
-(``make_cascade_ingest_batch_fn``) that runs an exact md5-fingerprint
-tier in front of MinHash so crawl re-fetches are rejected at an
-equi-join's cost before any shingling runs, and the FULL three-tier
-cascade (``make_full_cascade_ingest_batch_fn``: exact → MinHash →
-semantic, registered end-to-end as q104). Every MinHash-tier sink can
-additionally maintain the PERSISTED BANDED LAYOUT
-(``bands_root``/``sig_bands_root`` + pipeline/dedup.py:banded_signatures)
-on the same delta/manifest lifecycle, cutting the per-batch candidate
-scan ~5.8× (SCALING.md); semantic sinks stamp and check the codebook
-fingerprint, and ``reindex_semantic_root`` is the codebook-refresh swap.
+ONE ADMISSION CORE, FOUR FRONTS. ``_admission_core`` runs an ordered
+tier pipeline over every micro-batch — quality → exact → intra-batch
+exact → media_dup → near_dup → semantic → contaminated — where a tier
+runs only when its root, frame or flag is configured, each tier sees
+only the docs every earlier tier let through, and the first tier that
+hits names the decision's matched_id, score and tier. The core also
+owns the decisions projection, the one materialization of the admitted
+docs, and the per-root publish chains (delta → config stamp → drift
+log). The four public sinks are thin fronts that switch tiers on and
+fix the on-disk decisions schema:
+
+- ``make_ingest_batch_fn`` — MinHash only:
+  ``(doc_id, admitted, matched_id, jaccard)``;
+- ``make_semantic_ingest_batch_fn`` — semantic only, over
+  ``(vec_id, embedding)`` batches: ``(vec_id, admitted, matched_id, cos)``;
+- ``make_cascade_ingest_batch_fn`` — every embeddings-free tier:
+  ``(doc_id, admitted, matched_id, jaccard, tier)``;
+- ``make_full_cascade_ingest_batch_fn`` — every tier, registered
+  end-to-end as q104: ``(doc_id, admitted, matched_id, score, tier)``.
+  Its docstring documents every tier and parameter once.
+
+Each ``run_*_ingest_stream`` drives its front through foreachBatch
+under an availableNow trigger and reads the decisions log back. The
+MinHash tier can maintain the PERSISTED BANDED LAYOUT
+(pipeline/dedup.py:banded_signatures) on the same delta/manifest
+lifecycle, cutting the per-batch candidate scan ~5.8× (SCALING.md); the
+semantic tier stamps and checks the codebook fingerprint, and
+``reindex_semantic_root`` is the codebook-refresh swap.
 
 Round-8 lifecycle hardening (all measured/argued in SCALING.md):
 - WRITER FENCING: every sink acquires its roots at construction
@@ -71,6 +86,8 @@ Round-8 lifecycle hardening (all measured/argued in SCALING.md):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -578,60 +595,31 @@ def _publish_delta(
 
 
 def _run_publish_chains(*chains) -> None:
-    """Run independent per-root publish chains CONCURRENTLY (round 13,
-    guide §2.6: Spark actions are only sequential because driver code
-    calls them sequentially; independent jobs back-fill the tail of each
-    other's stages — and each publish here is a small write job whose
-    fixed cost the sequential form paid N times end-to-end).
+    """Run independent per-root publish chains CONCURRENTLY, one pool
+    thread per live chain (Spark actions are only sequential because
+    driver code calls them sequentially; each publish is a small write
+    job whose fixed cost a sequential form pays N times end-to-end).
 
     Each chain is a callable (or None to skip) that touches exactly ONE
     index root. Cross-root publish ORDER was never a correctness edge: a
     crash between any subset of a batch's publishes just redelivers the
     batch, and every manifest re-commit replaces rather than duplicates
-    (the _publish_delta contract), so the crash states reachable under
-    concurrency are the same redelivery-recoverable states the old fixed
-    order could leave. Orderings that DO carry an invariant stay inside
-    one chain: delta → config stamp → drift log share a root's manifest
-    (never written from two threads), and signatures → bands preserves
-    _check_bands_coverage's bands ⊆ sigs coverage rule. Fencing is
-    unchanged: every chain's publish re-checks the epoch before its
-    write and the manifest commit enforces it, so a fenced writer fails
-    on every chain without committing anything.
+    (the _publish_delta contract). Orderings that DO carry an invariant
+    stay inside one chain: delta → config stamp → drift log share a
+    root's manifest (never written from two threads), and signatures →
+    bands preserves _check_bands_coverage's bands ⊆ sigs coverage rule.
+    Fencing holds per chain: every chain's publish re-checks the epoch
+    before its write and the manifest commit enforces it, so a fenced
+    writer fails on every chain without committing anything.
 
     All chains are awaited; the first failure re-raises after the rest
-    settle (same error surface as the sequential form, minus the
-    prefix-only-published guarantee that redelivery never relied on).
-
-    Round 14 (VERDICT r13 item 1): the driver's r13 steady-state uptick was
-    adjudicated with an in-process alternating A/B (tools/ab_publish_chains.py,
-    widths 1/2/3/6 interleaved ×3 in one session, 3-tier and 6-tier sinks):
-    sequential publishes are the SLOWEST arm on every series (3-tier match
-    8.2–8.6 s vs 6.2–6.5 s uncapped; 6-tier match 9.4–13.0 s vs 8.7–9.5 s),
-    and the regressed driver series included sem_codebook_fit/sem_index_build,
-    which never call this function — the uptick was host-window drift, not
-    this concurrency. Guide §2.6's "2-3 jobs is plenty" caution does not
-    bind because each chain is one small write job, not a stage-filling
-    query, so the default stays UNCAPPED (one worker per live chain); the
-    pool width is env-tunable for deployments where publish jobs are large
-    enough to fight for executors (SPARK_GRAFT_PUBLISH_CONCURRENCY; <=1
-    runs the chains sequentially, the pre-round-13 form)."""
+    settle."""
     from concurrent.futures import ThreadPoolExecutor
 
     live = [c for c in chains if c is not None]
-    try:
-        width = int(
-            os.environ.get("SPARK_GRAFT_PUBLISH_CONCURRENCY", str(len(live)))
-        )
-    except ValueError:
-        width = len(live)
-    if len(live) <= 1 or width <= 1:
-        for c in live:
-            c()
-        return
-    with ThreadPoolExecutor(max_workers=min(width, len(live))) as pool:
+    with ThreadPoolExecutor(max_workers=max(1, len(live))) as pool:
         futures = [pool.submit(c) for c in live]
-        errors = [f.exception() for f in futures]
-    for ex in errors:
+    for ex in [f.exception() for f in futures]:
         if ex is not None:
             raise ex
 
@@ -658,6 +646,413 @@ def delta_dir(index_root: str, batch_id: int) -> str:
     )
 
 
+def _intra_batch_exact_best(docs: DataFrame) -> DataFrame:
+    """(doc_id, ib_id) for every batch doc that byte-duplicates a LOWER
+    doc_id in the same (index-surviving) batch slice; ib_id is the lowest
+    such copy — the batch REPRESENTATIVE, which proceeds to the later
+    tiers and is usually (not always) admitted and indexed: when a later
+    tier rejects the representative itself, its copies' matched_id still
+    names it, and the representative's own decision row carries the real
+    provenance (see make_full_cascade_ingest_batch_fn's intra_batch_exact
+    note). Shape: one narrow min-aggregate + fp equi-join over the batch
+    (no window, no index involvement — strictly O(batch))."""
+    fps = docs.select(
+        "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
+    )
+    best = fps.groupBy("fp").agg(F.min("doc_id").alias("ib_id"))
+    return (
+        fps.join(best, "fp")
+        .where(F.col("doc_id") > F.col("ib_id"))
+        .select("doc_id", "ib_id")
+    )
+
+
+def _col_or_lit(value):
+    return F.col(value) if isinstance(value, str) else F.lit(value)
+
+
+class _Tier(NamedTuple):
+    """One admission check of the core's pipeline.
+
+    ``match(batch_id, live)`` returns the best-match frame of the live
+    docs this tier rejects — the batch key plus the tier's ``matched``
+    and/or ``score`` columns — or None when the tier has no index yet.
+    ``matched`` names the matched-id column (None: the reject has no
+    corpus counterpart and reports -1); the tier hits a row exactly where
+    ``matched`` (else ``score``) is non-NULL. ``score`` is a column name
+    or a constant. ``index(batch_id, batch, admitted)`` returns the
+    tier's per-root publish chain; ``check()`` runs before the batch is
+    read (the config stamps that must fail before anything publishes)."""
+
+    name: str
+    matched: str | None
+    score: str | float
+    match: Callable[[int, DataFrame], DataFrame | None]
+    index: Callable[[int, DataFrame, DataFrame], Callable[[], None]] | None = None
+    check: Callable[[], None] | None = None
+
+
+def _admission_core(
+    spark: SparkSession,
+    decisions_root: str,
+    compact_every: int | None,
+    *,
+    key: str = "doc_id",
+    score_col: str = "score",
+    tiered: bool = True,
+    quality_gate: bool = False,
+    fp_index_root: str | None = None,
+    fp_distinct: bool = True,
+    intra_batch_exact: bool = False,
+    phash_index_root: str | None = None,
+    phash_band_cap: int | None = None,
+    phash_cells: int | None = None,
+    phash_bands: int | None = None,
+    sig_index_root: str | None = None,
+    threshold: float | None = None,
+    shingler=None,
+    sig_bands_root: str | None = None,
+    band_cap: int | None = None,
+    sem_index_root: str | None = None,
+    centroids: DataFrame | None = None,
+    cos_threshold: float | None = None,
+    cell_cap: int | None = None,
+    benchmark_span_index: DataFrame | None = None,
+    cont_threshold: float = 0.05,
+):
+    """The one admission sink behind the four public fronts: a
+    foreachBatch function that runs the ordered tier pipeline quality →
+    exact → intra-batch exact → media_dup → near_dup → semantic →
+    contaminated over each batch. A tier runs only when its root, frame
+    or flag is passed; each sees only the docs every earlier tier let
+    through (tier precedence is strict), and the first tier that hits
+    names the decision's matched_id, score and tier. Parameters are
+    documented on make_full_cascade_ingest_batch_fn; the front-only ones:
+
+    ``key`` — the batch's id column (``vec_id`` for the semantic front's
+    ``(vec_id, embedding)`` batches, else ``doc_id``, whose batches carry
+    ``text`` and, for the semantic tier, ``embedding``). ``score_col`` /
+    ``tiered`` — the decisions schema ``(key, admitted, matched_id,
+    score_col[, tier])``; a score is 0.0 and a matched_id -1 for admitted
+    rows.
+
+    Per batch: config checks, one read of the source (localCheckpoint),
+    one materialized best-match frame per tier that has something to
+    match, one materialization of the admitted docs when more than one
+    index root is built from them, then the decisions delta and each
+    index root's delta (with its config stamp and drift log) as
+    concurrent per-root publish chains (_run_publish_chains). Every root
+    is acquired at construction (writer fencing, storage.py) — after the
+    argument checks, so a rejected configuration fences nobody."""
+    from pyspark.sql.window import Window
+
+    for name, value, root, root_name in (
+        ("band_cap", band_cap, sig_bands_root, "its bands_root / sig_bands_root"),
+        ("phash_band_cap", phash_band_cap, phash_index_root, "phash_index_root"),
+        ("phash_cells", phash_cells, phash_index_root, "phash_index_root"),
+        ("phash_bands", phash_bands, phash_index_root, "phash_index_root"),
+    ):
+        if value is not None and root is None:
+            raise ValueError(
+                f"{name} requires {root_name} — without it the setting would be "
+                "silently ignored"
+            )
+    for name, cap in (("band_cap", band_cap), ("cell_cap", cell_cap)):
+        if cap is not None and compact_every is None:
+            raise ValueError(
+                f"{name} is applied at compaction, but compact_every=None means "
+                "compaction never runs — the index would stay uncapped. Set "
+                f"compact_every (the cap re-applies every fold) or drop {name}."
+            )
+    if phash_index_root is not None:
+        from mapreduce_framework_spark.pipeline.multimodal_dedup import phash_params
+
+        # the sink holds exactly one grid config for its life (fail-fast on a
+        # bad pair)
+        phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
+
+    def publish(root, epoch, batch_id, df, transform=None):
+        _publish_delta(
+            spark, root, batch_id, df, compact_every, epoch=epoch,
+            compact_transform=transform,
+        )
+
+    def best_of(matches, part, score, index_id, matched, scored):
+        # the highest-scoring match per batch row, ties to the lowest index id
+        w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(index_id).asc())
+        return (
+            matches.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select(
+                F.col(part).alias(key),
+                F.col(index_id).alias(matched),
+                F.col(score).alias(scored),
+            )
+        )
+
+    tiers: list[_Tier] = []
+    if quality_gate:
+        from mapreduce_framework_spark.pipeline.quality import quality_rejects
+
+        tiers.append(_Tier("quality", None, "ql_frac", lambda b, live: (
+            quality_rejects(live).select(key, F.col("q_frac").alias("ql_frac"))
+        )))
+
+    if fp_index_root is not None:
+        from mapreduce_framework_spark.pipeline.dedup import (
+            cap_fingerprints,
+            exact_fingerprint_index,
+            exact_match_batch,
+        )
+
+        ep_fp = acquire_index_root(fp_index_root)
+
+        def _exact(batch_id, live):
+            idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
+            if idx is None:
+                return None
+            return (
+                exact_match_batch(idx, live)
+                .groupBy("id2")
+                .agg(F.min("id1").alias("ex_id"))
+                .select(F.col("id2").alias(key), "ex_id")
+            )
+
+        def _fp_chain(batch_id, batch, admitted):
+            delta = exact_fingerprint_index(admitted, distinct=fp_distinct)
+            return lambda: publish(
+                fp_index_root, ep_fp, batch_id, delta,
+                cap_fingerprints if fp_distinct else None,
+            )
+
+        tiers.append(_Tier("exact", "ex_id", 1.0, _exact, _fp_chain))
+
+    if intra_batch_exact:
+        tiers.append(_Tier(
+            "exact", "ib_id", 1.0, lambda b, live: _intra_batch_exact_best(live)
+        ))
+
+    if phash_index_root is not None:
+        from mapreduce_framework_spark.pipeline.multimodal_dedup import (
+            phash_fingerprint,
+            phash_index,
+            phash_match_batch,
+        )
+
+        ph_fp = phash_fingerprint(phash_cells, phash_bands)
+        ep_ph = acquire_index_root(phash_index_root)
+
+        def _media(batch_id, live):
+            idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
+            if idx is None:
+                return None
+            return phash_match_batch(
+                idx, live.select(key, "text"), band_cap=phash_band_cap,
+                cells=phash_cells, bands=phash_bands,
+            ).select(
+                key,
+                F.col("matched_id").alias("ph_id"),
+                ((F.lit(phash_cells) - F.col("hamming")) / F.lit(float(phash_cells)))
+                .alias("ph_sim"),
+            )
+
+        def _ph_chain(batch_id, batch, admitted):
+            delta = phash_index(admitted.select(key, "text"), cells=phash_cells)
+
+            def chain():
+                publish(phash_index_root, ep_ph, batch_id, delta)
+                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
+
+            return chain
+
+        tiers.append(_Tier(
+            "media_dup", "ph_id", "ph_sim", _media, _ph_chain,
+            # unconditional, like the codebook check: a batch-0 restart over
+            # an existing root must fail on a width mismatch before publishing
+            lambda: _require_phash_config(phash_index_root, ph_fp),
+        ))
+
+    if sig_index_root is not None:
+        from mapreduce_framework_spark.pipeline.dedup import (
+            banded_signatures,
+            cap_banded,
+            index_signatures,
+            match_batch,
+        )
+
+        ep_sig = acquire_index_root(sig_index_root)
+        ep_bands = (
+            None if sig_bands_root is None else acquire_index_root(sig_bands_root)
+        )
+        bands_cap = None if band_cap is None else (lambda df: cap_banded(df, band_cap))
+
+        def _near(batch_id, live):
+            idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
+            if idx is None:
+                return None
+            bands = None
+            if sig_bands_root is not None:
+                _check_bands_coverage(
+                    sig_index_root, sig_bands_root, before_batch=batch_id
+                )
+                bands = _index_so_far(spark, sig_bands_root, before_batch=batch_id)
+            matches = match_batch(idx, live, threshold, shingler, index_bands=bands)
+            return best_of(matches, "id2", "jaccard", "id1", "nd_id", "nd_jaccard")
+
+        def _sig_chain(batch_id, batch, admitted):
+            sig_delta = index_signatures(admitted, shingler)
+            if sig_bands_root is not None:
+                # one materialization feeds both publishes (the band rows are
+                # a projection of the signature delta, not a recompute)
+                sig_delta = sig_delta.localCheckpoint(eager=True)
+
+            def chain():
+                publish(sig_index_root, ep_sig, batch_id, sig_delta)
+                if sig_bands_root is not None:
+                    publish(
+                        sig_bands_root, ep_bands, batch_id,
+                        banded_signatures(sig_delta), bands_cap,
+                    )
+
+            return chain
+
+        tiers.append(_Tier("near_dup", "nd_id", "nd_jaccard", _near, _sig_chain))
+
+    if sem_index_root is not None:
+        from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
+        from mapreduce_framework_spark.pipeline.semantic_dedup import (
+            SEMDEDUP_COS,
+            cap_cells,
+            semantic_index,
+            semantic_match_batch,
+        )
+
+        cb_fp = codebook_fingerprint(centroids)
+        cos_t = SEMDEDUP_COS if cos_threshold is None else cos_threshold
+        ep_sem = acquire_index_root(sem_index_root)
+        cells_cap = None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
+
+        def vectors(docs):
+            # the semantic tier's (vec_id, embedding) view: a doc-keyed batch's
+            # NULL embeddings are invisible to it (zero-norm ones are excluded
+            # downstream by _norms_spark)
+            if key == "vec_id":
+                return docs
+            return docs.where(F.col("embedding").isNotNull()).select(
+                F.col(key).alias("vec_id"), "embedding"
+            )
+
+        def _semantic(batch_id, live):
+            idx = _index_so_far(spark, sem_index_root, before_batch=batch_id)
+            if idx is None:
+                return None
+            matches = semantic_match_batch(idx, vectors(live), centroids, cos_t)
+            return best_of(matches, "new_id", "cos", "index_id", "sm_id", "sm_cos")
+
+        def _sem_chain(batch_id, batch, admitted):
+            def chain():
+                publish(
+                    sem_index_root, ep_sem, batch_id,
+                    semantic_index(vectors(admitted), centroids), cells_cap,
+                )
+                _stamp_codebook(sem_index_root, cb_fp, epoch=ep_sem)
+                # drift trigger: the WHOLE batch's quantization error under the
+                # held codebook (rejects carry drift signal too)
+                qerr = _batch_quantization_error(vectors(batch), centroids)
+                _log_drift(sem_index_root, batch_id, qerr, epoch=ep_sem)
+
+            return chain
+
+        tiers.append(_Tier(
+            "semantic", "sm_id", "sm_cos", _semantic, _sem_chain,
+            lambda: _require_codebook(sem_index_root, cb_fp),
+        ))
+
+    if benchmark_span_index is not None:
+        from mapreduce_framework_spark.pipeline.span_dedup import span_contamination
+
+        tiers.append(_Tier("contaminated", None, "ct_frac", lambda b, live: (
+            span_contamination(benchmark_span_index, live.select(key, "text"))
+            .where(F.col("cont_frac") >= cont_threshold)
+            .select(key, F.col("cont_frac").alias("ct_frac"))
+        )))
+
+    ep_dec = acquire_index_root(decisions_root)
+    indexed = [t for t in tiers if t.index is not None]
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        for t in tiers:
+            if t.check is not None:
+                t.check()
+        batch = batch_df.localCheckpoint(eager=True)  # read the source once
+        live, hits = batch, []
+        for t in tiers:
+            best = t.match(batch_id, live)
+            if best is not None:
+                best = best.localCheckpoint(eager=True)
+                live = live.join(best, key, "left_anti")
+                hits.append((t, best))
+
+        decisions = batch.select(key)
+        for _, best in hits:
+            decisions = decisions.join(best, key, "left")
+        admitted = F.lit(True)
+        matched, score, tier = F.lit(-1), F.lit(0.0), F.lit(None).cast("string")
+        for t, _ in reversed(hits):  # the first tier that hit names the decision
+            hit = F.col(t.matched or t.score).isNotNull()
+            admitted = ~hit & admitted
+            matched = F.when(hit, _col_or_lit(t.matched or -1)).otherwise(matched)
+            score = F.when(hit, _col_or_lit(t.score)).otherwise(score)
+            tier = F.when(hit, F.lit(t.name)).otherwise(tier)
+        cols = [
+            admitted.alias("admitted"),
+            matched.cast("long").alias("matched_id"),
+            score.alias(score_col),
+        ]
+        if tiered:
+            cols.append(tier.alias("tier"))
+        decisions = decisions.select(key, *cols)
+
+        if len(indexed) > 1:
+            # every index delta reads `admitted`: run its anti-join chain once
+            live = live.localCheckpoint(eager=True)
+        _run_publish_chains(
+            lambda: publish(decisions_root, ep_dec, batch_id, decisions),
+            *[t.index(batch_id, batch, live) for t in indexed],
+        )
+
+    return apply_batch
+
+
+def _run_ingest_stream(
+    stream: DataFrame,
+    spark: SparkSession,
+    decisions_root: str,
+    checkpoint: str,
+    timeout_s: int,
+    apply_batch,
+    what: str,
+) -> DataFrame:
+    """Drive ``stream`` through one sink front with foreachBatch under an
+    availableNow trigger and return the decisions log read back from
+    ``decisions_root`` (the union of every batch's decisions)."""
+    q = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{what} stream did not finish in {timeout_s}s")
+    decisions = _index_so_far(spark, decisions_root)
+    if decisions is None:
+        raise ValueError(
+            f"stream processed no batches — no decisions under {decisions_root}"
+        )
+    return decisions
+
+
 def make_ingest_batch_fn(
     spark: SparkSession,
     index_root: str,
@@ -668,128 +1063,17 @@ def make_ingest_batch_fn(
     bands_root: str | None = None,
     band_cap: int | None = None,
 ):
-    """foreachBatch function: match the batch against the index-so-far,
-    write decisions (admitted / matched_id / jaccard) and the admitted
-    docs' signature delta. ``shingler``: the shingle builder shared by
-    index build and matching (default word shingles; pass
-    ``char_shingles_of`` + ``CHAR_JACCARD_THRESHOLD`` for the
-    character-8-gram tier — see pipeline/dedup.py:index_signatures).
-    ``compact_every``: fold the delta tail into one compacted dir once it
-    reaches this many entries (None = never; decisions are byte-identical
-    either way — tests/test_streaming.py::test_ingest_compaction_preserves_decisions).
-    ``bands_root``: optional PERSISTED BANDED LAYOUT root
-    (pipeline/dedup.py:banded_signatures) maintained on the same delta/
-    manifest lifecycle: each batch publishes its admitted docs' band rows
-    alongside the signature delta, and matching joins the narrow band
-    table instead of re-deriving bands from 64 minhash longs per batch —
-    the 5.8× per-batch index-scan reduction measured in SCALING.md.
-    Decisions are byte-identical either way; a bands root whose coverage
-    diverges from the signature root (enabled mid-stream, lost delta) is
-    a hard error before any match runs.
-
-    Constructing the sink ACQUIRES every root it writes (writer fencing,
-    storage.py): a second sink later constructed over the same roots
-    fences this one — its next publish hard-errors with nothing
-    committed, killing silent last-writer-wins between two streams or a
-    zombie retry of a replaced driver (pinned by
-    tests/test_streaming.py::test_writer_fencing_two_sinks_one_root).
-
-    ``band_cap`` (requires ``bands_root``): hot-band skew guard — every
-    compaction of the bands root re-bounds each (band, bsig) group to its
-    cap lowest-doc_id rows (pipeline/dedup.py:cap_banded has the recall
-    argument). Between compactions the accumulated excess is bounded by
-    the tail (≤ compact_every batches), so the candidate join's max key
-    population stays ≤ band_cap + tail even against a boilerplate-cluster
-    adversary. None (default) keeps decisions exact."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        index_signatures,
-        match_batch,
+    """The single-tier MinHash front: match each ``(doc_id, text)`` batch
+    against the signature index so far (``index_root``; ``bands_root`` is
+    its persisted banded layout) and write decisions ``(doc_id, admitted,
+    matched_id, jaccard)``. Parameters as on
+    make_full_cascade_ingest_batch_fn (``index_root`` = sig_index_root,
+    ``bands_root`` = sig_bands_root)."""
+    return _admission_core(
+        spark, decisions_root, compact_every, score_col="jaccard", tiered=False,
+        sig_index_root=index_root, threshold=threshold, shingler=shingler,
+        sig_bands_root=bands_root, band_cap=band_cap,
     )
-
-    if band_cap is not None and bands_root is None:
-        raise ValueError("band_cap requires bands_root (the persisted banded layout)")
-    _require_compaction_for_caps(compact_every, band_cap=band_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
-    )
-    ep_idx = acquire_index_root(index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = acquire_index_root(bands_root) if bands_root is not None else None
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-        idx = _index_so_far(spark, index_root, before_batch=batch_id)
-        if idx is None:
-            best = None
-        else:
-            if bands_root is not None:
-                _check_bands_coverage(index_root, bands_root, before_batch=batch_id)
-                bands = _index_so_far(spark, bands_root, before_batch=batch_id)
-            else:
-                bands = None
-            matches = match_batch(idx, batch, threshold, shingler, index_bands=bands)
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            best = (
-                matches.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("matched_id"),
-                    "jaccard",
-                )
-                .localCheckpoint(eager=True)
-            )
-        if best is None:
-            decisions = batch.select(
-                "doc_id",
-                F.lit(True).alias("admitted"),
-                F.lit(-1).cast("long").alias("matched_id"),
-                F.lit(0.0).alias("jaccard"),
-            )
-            admitted_docs = batch
-        else:
-            decisions = batch.join(best, "doc_id", "left").select(
-                "doc_id",
-                F.col("matched_id").isNull().alias("admitted"),
-                F.coalesce("matched_id", F.lit(-1)).cast("long").alias("matched_id"),
-                F.coalesce("jaccard", F.lit(0.0)).alias("jaccard"),
-            )
-            admitted_docs = batch.join(best, "doc_id", "left_anti")
-        sig_delta = index_signatures(admitted_docs, shingler)
-        if bands_root is not None:
-            # one materialization feeds both publishes (the band rows are a
-            # projection of the signature delta, not a recompute)
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        # round 13: decisions and signatures(+bands) go to independent
-        # roots — publish the two chains concurrently (_run_publish_chains)
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_idx,
-            )
-            if bands_root is not None:
-                _publish_delta(
-                    spark, bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _run_publish_chains(_chain_decisions, _chain_sig)
-
-    return apply_batch
 
 
 def run_ingest_stream(
@@ -805,34 +1089,15 @@ def run_ingest_stream(
     bands_root: str | None = None,
     band_cap: int | None = None,
 ) -> DataFrame:
-    """Drive the document stream through the ingest-dedup sink; returns
-    the union of all per-batch decision frames."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_ingest_batch_fn(
-                spark,
-                index_root,
-                decisions_root,
-                threshold,
-                shingler,
-                compact_every,
-                bands_root,
-                band_cap,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the document stream through :func:`make_ingest_batch_fn`;
+    returns the union of all per-batch decision frames."""
+    fn = make_ingest_batch_fn(
+        spark, index_root, decisions_root, threshold, shingler, compact_every,
+        bands_root, band_cap,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions
+    return _run_ingest_stream(
+        docs_stream, spark, decisions_root, checkpoint, timeout_s, fn, "ingest"
+    )
 
 
 def make_semantic_ingest_batch_fn(
@@ -844,128 +1109,18 @@ def make_semantic_ingest_batch_fn(
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     cell_cap: int | None = None,
 ):
-    """The semantic-family twin of :func:`make_ingest_batch_fn`: each
-    embedding micro-batch is matched against the semantic cell index so
-    far (`pipeline/semantic_dedup.py::semantic_match_batch` — only the
-    batch scores centroids), rejected vectors are reported with their
-    best (highest-cosine, then smallest-id) index match, and admitted
-    vectors' cell assignments are appended as a delta. Same delta-
-    directory topology, same strictly-before-batch_id visibility rule,
-    and therefore the same crash-restart redelivery idempotence as the
-    MinHash ingest (pinned by
-    tests/test_streaming.py::test_semantic_ingest_redelivery_is_idempotent).
-    ``centroids`` is the FIXED fitted codebook every batch shares
-    (pipeline/codebook.py; typically read back from its parquet
-    artifact) — admission decisions are only meaningful against one
-    codebook, exactly as the index itself.
-
-    Edge policies (mirroring similarity._norms_spark's zero-norm gate):
-    - A ZERO-NORM batch vector has no cosine neighborhood, so it can
-      never match the index: its decision row says ``admitted=True``,
-      but ``semantic_index``'s norm gate silently EXCLUDES it from the
-      written delta — it is admitted into the corpus yet never indexed,
-      so later duplicates of it are not rejected against it.
-    - INTRA-BATCH duplicates are all admitted: this sink owns only the
-      batch-vs-index decision; within-batch self-dedup is upstream's job
-      (q102 / semantic_dedup), same division of labor as the MinHash
-      sink's within-batch policy (module docstring).
-
-    The index manifest records the codebook's fingerprint; every batch
-    checks it BEFORE publishing anything, so pairing this sink with an
-    index built under a different codebook (e.g. after refit_codebook
-    without reindex_semantic_root) is a hard error, never silent
-    mis-matching.
-
-    ``cell_cap``: hot-cell skew guard — every compaction of the index
-    root re-bounds each cell to its cap lowest-vec_id rows
-    (pipeline/semantic_dedup.py:cap_cells has the recall argument,
-    exact for identical-embedding clusters). None (default) keeps the
-    index exact."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEMDEDUP_COS,
-        cap_cells,
-        semantic_index,
-        semantic_match_batch,
+    """The single-tier semantic front: match each ``(vec_id, embedding)``
+    batch against the semantic cell index so far (``index_root``) and
+    write decisions ``(vec_id, admitted, matched_id, cos)``. Parameters as
+    on make_full_cascade_ingest_batch_fn (``index_root`` = sem_index_root,
+    ``threshold`` = cos_threshold). A ZERO-NORM vector has no cosine
+    neighborhood: it is admitted but never indexed, so later copies of it
+    are not rejected against it."""
+    return _admission_core(
+        spark, decisions_root, compact_every, key="vec_id", score_col="cos",
+        tiered=False, sem_index_root=index_root, centroids=centroids,
+        cos_threshold=threshold, cell_cap=cell_cap,
     )
-
-    if threshold is None:
-        threshold = SEMDEDUP_COS
-    cb_fp = codebook_fingerprint(centroids)
-    _require_compaction_for_caps(compact_every, cell_cap=cell_cap)
-    cells_transform = (
-        None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
-    )
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_idx = acquire_index_root(index_root)
-    ep_dec = acquire_index_root(decisions_root)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _require_codebook(index_root, cb_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-        idx = _index_so_far(spark, index_root, before_batch=batch_id)
-        if idx is None:
-            best = None
-        else:
-            matches = semantic_match_batch(idx, batch, centroids, threshold)
-            w = Window.partitionBy("new_id").orderBy(
-                F.col("cos").desc(), F.col("index_id").asc()
-            )
-            best = (
-                matches.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("new_id").alias("vec_id"),
-                    F.col("index_id").alias("matched_id"),
-                    "cos",
-                )
-                .localCheckpoint(eager=True)
-            )
-        if best is None:
-            decisions = batch.select(
-                "vec_id",
-                F.lit(True).alias("admitted"),
-                F.lit(-1).cast("long").alias("matched_id"),
-                F.lit(0.0).alias("cos"),
-            )
-            admitted = batch
-        else:
-            decisions = batch.join(best, "vec_id", "left").select(
-                "vec_id",
-                F.col("matched_id").isNull().alias("admitted"),
-                F.coalesce("matched_id", F.lit(-1)).cast("long").alias("matched_id"),
-                F.coalesce("cos", F.lit(0.0)).alias("cos"),
-            )
-            admitted = batch.join(best, "vec_id", "left_anti")
-        # round 13: two independent roots — concurrent publish chains
-        # (_run_publish_chains); the index chain keeps its internal
-        # delta → stamp → drift order (one manifest, one thread)
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_sem():
-            _publish_delta(
-                spark, index_root, batch_id, semantic_index(admitted, centroids),
-                compact_every, epoch=ep_idx,
-                compact_transform=cells_transform,
-            )
-            _stamp_codebook(index_root, cb_fp, epoch=ep_idx)
-            # drift trigger: log the WHOLE batch's quantization error under
-            # the held codebook (admitted + rejected — rejects carry drift
-            # signal too), so needs_refit() can read the trend
-            _log_drift(
-                index_root, batch_id, _batch_quantization_error(batch, centroids),
-                epoch=ep_idx,
-            )
-
-        _run_publish_chains(_chain_decisions, _chain_sem)
-
-    return apply_batch
 
 
 def run_semantic_ingest_stream(
@@ -980,28 +1135,17 @@ def run_semantic_ingest_stream(
     compact_every: int | None = DEFAULT_COMPACT_EVERY,
     cell_cap: int | None = None,
 ) -> DataFrame:
-    """Drive the embedding stream through the semantic admission sink;
-    returns the union of all per-batch decision frames."""
-    q = (
-        embs_stream.writeStream.foreachBatch(
-            make_semantic_ingest_batch_fn(
-                spark, index_root, decisions_root, centroids, threshold,
-                compact_every, cell_cap,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the embedding stream through
+    :func:`make_semantic_ingest_batch_fn`; returns the union of all
+    per-batch decision frames."""
+    fn = make_semantic_ingest_batch_fn(
+        spark, index_root, decisions_root, centroids, threshold, compact_every,
+        cell_cap,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"semantic ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions
+    return _run_ingest_stream(
+        embs_stream, spark, decisions_root, checkpoint, timeout_s, fn,
+        "semantic ingest",
+    )
 
 
 def make_cascade_ingest_batch_fn(
@@ -1024,438 +1168,68 @@ def make_cascade_ingest_batch_fn(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ):
-    """Tiered admission: the EXACT fingerprint tier runs in front of the
-    MinHash near-dup tier, each batch doc paying the cheapest test that
-    can reject it. Real pretraining ingest is exactly this cascade
-    (exact → near-dup → semantic): crawl re-fetches — typically the bulk
-    of rejects — fall to a narrow md5 equi-join
-    (pipeline/dedup.py:exact_match_batch) before any shingling/MinHash
-    work runs, and only the survivors are shingled. Both tiers keep
-    their own manifest-addressed delta index (fingerprints under
-    ``fp_index_root``, signatures under ``sig_index_root``), the same
-    strictly-before-batch_id visibility rule, and therefore the same
-    crash-restart redelivery idempotence as the single-tier sinks — a
-    crash BETWEEN the two delta publishes just redelivers the batch,
-    which overwrites both deltas (each manifest keys entries by
-    batch_id, so re-commits replace rather than duplicate).
+    """The embeddings-free cascade front: every tier of
+    make_full_cascade_ingest_batch_fn except the semantic one, over
+    ``(doc_id, text)`` batches, with decisions ``(doc_id, admitted,
+    matched_id, jaccard, tier)`` — ``jaccard`` is the tier-typed score
+    (the full cascade's ``score``). Parameters as documented there.
 
-    Decisions add a ``tier`` column over the single-tier schema:
-    'exact' (jaccard reported as 1.0 — a byte-identical copy IS a
-    jaccard-1.0 pair), 'near_dup' (the verified estimate), or NULL for
-    admitted docs. ``matched_id`` is the smallest exact-matching index
-    id in the exact tier, else the near-dup best match (highest
-    jaccard, ties to the lowest index id).
-
-    Decision parity with the single-tier MinHash sink: identical
+    Decision parity with the single-tier MinHash front: identical
     ``admitted`` sets for docs with at least SHINGLE_K tokens (pinned by
     tests/test_streaming.py::test_cascade_ingest_decisions). Degenerate
-    docs diverge BY DESIGN: a shingle-free doc (< SHINGLE_K tokens,
-    incl. NULL/empty text — the family's NULL-behaves-as-empty policy)
-    is invisible to MinHash but byte-collapses in the exact tier, so
-    the cascade is strictly stricter there. ``matched_id`` may differ
-    from the single tier's when an exact copy ALSO jaccard-ties with a
-    lower-id non-identical index doc (the single tier picks the lowest
-    id among all 1.0 ties; the cascade never consults the near-dup tier
-    for exact-rejected docs).
-
-    ``fp_distinct`` (default True — DECISION-LOSSLESS, see
-    pipeline/dedup.py:cap_fingerprints): the fp index keeps one
-    min-doc_id row per fingerprint — per-batch deltas are written
-    distinct, and compaction re-applies the rule index-wide — so a
-    boilerplate cluster can never pile 10⁶ identical rows behind one fp
-    join key (the exact tier's hot-key guard; the admission rule's
-    min(id1) makes the retained row exactly the one every decision
-    reports).
-
-    ``intra_batch_exact`` (default False — the module-wide
-    within-batch-is-upstream's-job policy): opt-in pre-dedup of
-    BYTE-IDENTICAL copies arriving in one batch. Runs strictly AFTER the
-    index tier (same fp ⇒ same index verdict, so order only matters for
-    index-missed fps): among batch docs whose fp is new to the corpus,
-    the lowest doc_id (the batch REPRESENTATIVE) is admitted past this
-    tier and every other copy is rejected with tier 'exact' and
-    matched_id = that representative. NOTE the representative may itself
-    be rejected by a LATER tier (near-dup/semantic/contaminated) — its
-    copies still carry tier 'exact' pointing at it, so matched_id names
-    the batch representative, which is not necessarily an admitted/
-    indexed corpus doc; the representative's own decision row carries
-    that provenance (round-10 ADVICE: this tier's matched_id contract is
-    weaker than the index tiers'). Changes decisions BY DESIGN
-    (stricter), hence opt-in and unregistered; differential-pinned by
-    tests/test_streaming.py::test_intra_batch_exact_pre_dedup.
-
-    ``benchmark_span_index`` / ``cont_threshold`` (round 10): the opt-in
-    DECONTAMINATION tier, exactly as documented on
-    make_full_cascade_ingest_batch_fn — the tier is purely LEXICAL
-    (tokenize/shingle + span-hash semi-join; embeddings never touched),
-    so it composes with the two-tier cascade identically: it runs LAST,
-    over full survivors only, rejects at cont_frac >= cont_threshold
-    with tier 'contaminated', matched_id -1 (the hit is benchmark-side),
-    and the ``jaccard`` column carries the cont_frac for those rows (the
-    tier-typed score generalization the full cascade makes explicit).
-    This is what lets an embeddings-free deployment — or the full
-    cascade's documented no-usable-centroid degradation — keep
-    decontamination instead of silently dropping it.
-
-    ``quality_gate`` (round 10, library-first; the r11 registration
-    candidate per registry.py): the opt-in QUALITY tier — the per-doc
-    admission gate of pipeline/quality.py:quality_rejects (the q105/q81
-    integer rule + the Gopher repetition flags). Runs FIRST, before any
-    index tier: it is the only tier that needs NO index at all (pure
-    per-doc compute, one batch-local gram aggregate — O(batch)), and
-    running it first keeps junk out of every index — the production
-    ordering (filter before dedup). A rejected doc carries tier
-    'quality', score = dup_frac, matched_id -1 (like 'contaminated',
-    the reject has no corpus counterpart) and is never indexed; it never
-    consults the later tiers, so a low-quality re-fetch reports
-    'quality', not 'exact' (tier precedence is strict in BOTH
-    directions). The streaming counterpart of q105's batch quality
-    stage — with it, the cascade reaches tier parity with the batch
-    flagship (quality → exact → near-dup [→ semantic] → decon).
-
-    ``phash_index_root`` / ``phash_band_cap`` (round 12, tier parity with
-    the full cascade — the q110 staging prerequisite): the opt-in
-    MULTIMODAL 'media_dup' tier between the exact and MinHash tiers,
-    with EXACTLY make_full_cascade_ingest_batch_fn's semantics (same
-    matcher, same index artifact, same no-bytes-no-media NULL/empty
-    policy, same cap_banded degradation contract — see that docstring).
-    The tier is pixel/text-only (embeddings never touched), so an
-    embeddings-free deployment — or the full cascade's documented
-    no-usable-centroid degradation — keeps perceptual media dedup
-    instead of silently dropping it, the same composition argument as
-    the decontamination tier above. ``phash_cells``/``phash_bands``
-    (round 13) select the grid width PER ROOT (multimodal_dedup.
-    phash_params; default the module 32/4): a 100 TB deployment passes
-    phash_cells=64 — the SCALING.md birthday-mass lever — and the
-    manifest's phash_config stamp makes a mixed-width root impossible
-    either way."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        cap_fingerprints,
-        exact_fingerprint_index,
-        exact_match_batch,
-        index_signatures,
-        match_batch,
-    )
-
-    if band_cap is not None and sig_bands_root is None:
-        raise ValueError(
-            "band_cap requires sig_bands_root (the persisted banded layout)"
-        )
-    _require_compaction_for_caps(compact_every, band_cap=band_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
-    )
-    fp_transform = cap_fingerprints if fp_distinct else None
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_fp = acquire_index_root(fp_index_root)
-    ep_sig = acquire_index_root(sig_index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = (
-        acquire_index_root(sig_bands_root) if sig_bands_root is not None else None
-    )
-    ep_ph = (
-        acquire_index_root(phash_index_root)
-        if phash_index_root is not None
-        else None
-    )
-    ph_fp = None
-    if phash_index_root is not None:
-        from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-            phash_fingerprint,
-            phash_params,
-        )
-
-        # resolve the width ONCE at construction (fail-fast on a bad
-        # pair) — the sink holds exactly one grid config for its life
-        phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
-        ph_fp = phash_fingerprint(phash_cells, phash_bands)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if phash_index_root is not None:
-            # hashes are only comparable under one grid config — checked
-            # unconditionally (like _require_codebook) so even a batch-0
-            # restart over an existing root with no visible index cannot
-            # publish a new-width delta into an old-width root
-            _require_phash_config(phash_index_root, ph_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-
-        qual_best = None
-        live = batch
-        if quality_gate:
-            from mapreduce_framework_spark.pipeline.quality import (
-                quality_rejects,
-            )
-
-            qual_best = (
-                quality_rejects(batch)
-                .select("doc_id", F.col("q_frac").alias("ql_frac"))
-                .localCheckpoint(eager=True)
-            )
-            live = batch.join(qual_best, "doc_id", "left_anti")
-
-        fp_idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
-        if fp_idx is None:
-            exact_best = None
-            survivors = live
-        else:
-            exact_best = (
-                exact_match_batch(fp_idx, live)
-                .groupBy("id2")
-                .agg(F.min("id1").alias("ex_id"))
-                .select(F.col("id2").alias("doc_id"), "ex_id")
-                .localCheckpoint(eager=True)
-            )
-            survivors = live.join(exact_best, "doc_id", "left_anti")
-
-        intra_best = None
-        if intra_batch_exact:
-            intra_best = _intra_batch_exact_best(survivors)
-            survivors = survivors.join(intra_best, "doc_id", "left_anti")
-
-        ph_best = None
-        if phash_index_root is not None:
-            ph_idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
-            if ph_idx is not None:
-                from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                    phash_match_batch,
-                )
-
-                ph_best = (
-                    phash_match_batch(
-                        ph_idx,
-                        survivors.select("doc_id", "text"),
-                        band_cap=phash_band_cap,
-                        cells=phash_cells,
-                        bands=phash_bands,
-                    )
-                    .select(
-                        "doc_id",
-                        F.col("matched_id").alias("ph_id"),
-                        (
-                            (F.lit(phash_cells) - F.col("hamming"))
-                            / F.lit(float(phash_cells))
-                        ).alias("ph_sim"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                survivors = survivors.join(ph_best, "doc_id", "left_anti")
-
-        sig_idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
-        if sig_idx is None:
-            near_best = None
-            admitted = survivors
-        else:
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            if sig_bands_root is not None:
-                _check_bands_coverage(
-                    sig_index_root, sig_bands_root, before_batch=batch_id
-                )
-                sig_bands = _index_so_far(
-                    spark, sig_bands_root, before_batch=batch_id
-                )
-            else:
-                sig_bands = None
-            near_best = (
-                match_batch(
-                    sig_idx, survivors, threshold, shingler, index_bands=sig_bands
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("nd_id"),
-                    F.col("jaccard").alias("nd_jaccard"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            admitted = survivors.join(near_best, "doc_id", "left_anti")
-
-        cont_best = None
-        if benchmark_span_index is not None:
-            from mapreduce_framework_spark.pipeline.span_dedup import (
-                span_contamination,
-            )
-
-            cont_best = (
-                span_contamination(
-                    benchmark_span_index, admitted.select("doc_id", "text")
-                )
-                .where(F.col("cont_frac") >= cont_threshold)
-                .select("doc_id", F.col("cont_frac").alias("ct_frac"))
-                .localCheckpoint(eager=True)
-            )
-            admitted = admitted.join(cont_best, "doc_id", "left_anti")
-
-        decisions = batch.select("doc_id")
-        if qual_best is not None:
-            decisions = decisions.join(qual_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ql_frac", F.lit(None).cast("double")
-            )
-        if exact_best is not None:
-            decisions = decisions.join(exact_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ex_id", F.lit(None).cast("long"))
-        if intra_best is not None:
-            decisions = decisions.join(intra_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ib_id", F.lit(None).cast("long"))
-        if ph_best is not None:
-            decisions = decisions.join(ph_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ph_id", F.lit(None).cast("long")
-            ).withColumn("ph_sim", F.lit(None).cast("double"))
-        if near_best is not None:
-            decisions = decisions.join(near_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "nd_id", F.lit(None).cast("long")
-            ).withColumn("nd_jaccard", F.lit(None).cast("double"))
-        if cont_best is not None:
-            decisions = decisions.join(cont_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ct_frac", F.lit(None).cast("double")
-            )
-        # ex_id and ib_id are mutually exclusive (intra-batch dedup runs on
-        # the index tier's survivors), so coalesce order is provenance, not
-        # precedence; ct_frac only on full survivors; ql_frac excludes a
-        # doc from every later tier (quality runs first)
-        ex_any = F.col("ex_id").isNotNull() | F.col("ib_id").isNotNull()
-        ql = F.col("ql_frac").isNotNull()
-        decisions = decisions.select(
-            "doc_id",
-            (
-                ~ql
-                & ~ex_any
-                & F.col("ph_id").isNull()
-                & F.col("nd_id").isNull()
-                & F.col("ct_frac").isNull()
-            ).alias("admitted"),
-            F.coalesce("ex_id", "ib_id", "ph_id", "nd_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_id"),
-            F.when(ql, F.col("ql_frac"))
-            .when(ex_any, F.lit(1.0))
-            .when(F.col("ph_id").isNotNull(), F.col("ph_sim"))
-            .when(F.col("nd_id").isNotNull(), F.col("nd_jaccard"))
-            .otherwise(F.coalesce("ct_frac", F.lit(0.0)))
-            .alias("jaccard"),
-            F.when(ql, F.lit("quality"))
-            .when(ex_any, F.lit("exact"))
-            .when(F.col("ph_id").isNotNull(), F.lit("media_dup"))
-            .when(F.col("nd_id").isNotNull(), F.lit("near_dup"))
-            .when(F.col("ct_frac").isNotNull(), F.lit("contaminated"))
-            .alias("tier"),
-        )
-        # round 13: one materialization of `admitted` feeds every index
-        # delta; the per-root publish chains run concurrently (see
-        # _run_publish_chains — same rationale as the full cascade)
-        admitted = admitted.localCheckpoint(eager=True)
-        sig_delta = index_signatures(admitted, shingler)
-        if sig_bands_root is not None:
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_fp():
-            _publish_delta(
-                spark, fp_index_root, batch_id,
-                exact_fingerprint_index(admitted, distinct=fp_distinct),
-                compact_every, epoch=ep_fp,
-                compact_transform=fp_transform,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, sig_index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_sig,
-            )
-            if sig_bands_root is not None:
-                _publish_delta(
-                    spark, sig_bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _chain_ph = None
-        if phash_index_root is not None:
-            from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                phash_index,
-            )
-
-            def _chain_ph():
-                _publish_delta(
-                    spark,
-                    phash_index_root,
-                    batch_id,
-                    phash_index(
-                        admitted.select("doc_id", "text"), cells=phash_cells
-                    ),
-                    compact_every,
-                    epoch=ep_ph,
-                )
-                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
-
-        _run_publish_chains(_chain_decisions, _chain_fp, _chain_sig, _chain_ph)
-
-    return apply_batch
-
-
-def _intra_batch_exact_best(docs: DataFrame) -> DataFrame:
-    """(doc_id, ib_id) for every batch doc that byte-duplicates a LOWER
-    doc_id in the same (index-surviving) batch slice; ib_id is the lowest
-    such copy — the batch REPRESENTATIVE, which proceeds to the later
-    tiers and is usually (not always) admitted and indexed: when a later
-    tier rejects the representative itself, its copies' matched_id still
-    names it, and the representative's own decision row carries the real
-    provenance (see make_cascade_ingest_batch_fn's intra_batch_exact
-    note). Shape: one narrow min-aggregate + fp equi-join over the batch
-    (no window, no index involvement — strictly O(batch))."""
-    fps = docs.select(
-        "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
-    )
-    best = fps.groupBy("fp").agg(F.min("doc_id").alias("ib_id"))
-    return (
-        fps.join(best, "fp")
-        .where(F.col("doc_id") > F.col("ib_id"))
-        .select("doc_id", "ib_id")
-        .localCheckpoint(eager=True)
+    docs diverge BY DESIGN: a shingle-free doc (< SHINGLE_K tokens, incl.
+    NULL/empty text) is invisible to MinHash but byte-collapses in the
+    exact tier. ``matched_id`` may differ from the single tier's when an
+    exact copy ALSO jaccard-ties with a lower-id non-identical index doc
+    (the cascade never consults the near-dup tier for exact rejects)."""
+    return _admission_core(
+        spark, decisions_root, compact_every, score_col="jaccard",
+        quality_gate=quality_gate, fp_index_root=fp_index_root,
+        fp_distinct=fp_distinct, intra_batch_exact=intra_batch_exact,
+        phash_index_root=phash_index_root, phash_band_cap=phash_band_cap,
+        phash_cells=phash_cells, phash_bands=phash_bands,
+        sig_index_root=sig_index_root, threshold=threshold, shingler=shingler,
+        sig_bands_root=sig_bands_root, band_cap=band_cap,
+        benchmark_span_index=benchmark_span_index, cont_threshold=cont_threshold,
     )
 
 
-def _require_compaction_for_caps(
-    compact_every: int | None, band_cap: int | None = None, cell_cap: int | None = None
-) -> None:
-    """The hot-key caps are applied exclusively at compaction
-    (compact_transform in _publish_delta); accepting a cap with
-    compact_every=None would hand back an exact (uncapped,
-    unbounded-hot-key) index while the caller believes the guard is on —
-    hard error instead (round-9 ADVICE)."""
-    if compact_every is None and band_cap is not None:
-        raise ValueError(
-            "band_cap is applied at compaction, but compact_every=None means "
-            "compaction never runs — the index would stay uncapped. Set "
-            "compact_every (the cap re-applies every fold) or drop band_cap."
-        )
-    if compact_every is None and cell_cap is not None:
-        raise ValueError(
-            "cell_cap is applied at compaction, but compact_every=None means "
-            "compaction never runs — the index would stay uncapped. Set "
-            "compact_every (the cap re-applies every fold) or drop cell_cap."
-        )
+def run_cascade_ingest_stream(
+    docs_stream: DataFrame,
+    spark: SparkSession,
+    fp_index_root: str,
+    sig_index_root: str,
+    decisions_root: str,
+    checkpoint: str,
+    threshold: float,
+    timeout_s: int = 300,
+    shingler=None,
+    compact_every: int | None = DEFAULT_COMPACT_EVERY,
+    sig_bands_root: str | None = None,
+    band_cap: int | None = None,
+    fp_distinct: bool = True,
+    intra_batch_exact: bool = False,
+    benchmark_span_index: DataFrame | None = None,
+    cont_threshold: float = 0.05,
+    quality_gate: bool = False,
+    phash_index_root: str | None = None,
+    phash_band_cap: int | None = None,
+    phash_cells: int | None = None,
+    phash_bands: int | None = None,
+) -> DataFrame:
+    """Drive the document stream through
+    :func:`make_cascade_ingest_batch_fn`; returns the union of all
+    per-batch decision frames."""
+    fn = make_cascade_ingest_batch_fn(
+        spark, fp_index_root, sig_index_root, decisions_root, threshold,
+        shingler, compact_every, sig_bands_root, band_cap, fp_distinct,
+        intra_batch_exact, benchmark_span_index, cont_threshold, quality_gate,
+        phash_index_root, phash_band_cap, phash_cells, phash_bands,
+    )
+    return _run_ingest_stream(
+        docs_stream, spark, decisions_root, checkpoint, timeout_s, fn,
+        "cascade ingest",
+    )
 
 
 def make_full_cascade_ingest_batch_fn(
@@ -1482,470 +1256,112 @@ def make_full_cascade_ingest_batch_fn(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ):
-    """The COMPLETE admission cascade the two-tier sink's docstring names
-    as the real pretraining shape: exact → near-dup → SEMANTIC. Batches
-    carry ``(doc_id, text, embedding)``; each doc pays the cheapest test
-    that can reject it — byte-identical re-fetches fall to the md5
-    equi-join, template/boilerplate rewrites to the MinHash tier, and
-    only the lexical survivors reach the semantic tier
-    (pipeline/semantic_dedup.py:semantic_match_batch — paraphrases and
-    translations that share no shingles but sit within ``cos_threshold``
-    cosine of an index doc, the SemDeDup motivation). Three
-    manifest-addressed delta indexes (fingerprints / signatures / cell
-    assignments), one decisions log, all on the q91 lifecycle: the same
-    strictly-before-batch_id visibility rule, so a crash between ANY of
-    the four publishes just redelivers the batch and every manifest
-    re-commit replaces rather than duplicates.
+    """The complete admission cascade (registered end-to-end as q104):
+    quality → exact → intra-batch exact → media_dup → near_dup → semantic
+    → contaminated over ``(doc_id, text, embedding)`` batches, each doc
+    paying the cheapest test that can reject it. Decisions
+    ``(doc_id, admitted, matched_id, score, tier)``: ``tier`` names the
+    first tier that rejected the doc (NULL = admitted) and ``score`` is
+    tier-typed — 1.0 for exact, the verified Jaccard for near_dup, the
+    exact cosine for semantic, (cells − hamming)/cells for media_dup,
+    dup_frac for quality, cont_frac for contaminated, 0.0 for admitted.
+    ``matched_id`` is the matched index doc, or -1 for admitted, quality
+    and contaminated rows (those rejects have no corpus counterpart).
+    Tier precedence is strict: a rejected doc never consults a later
+    tier, and no rejected doc is indexed by any tier.
 
-    ``centroids`` is the FIXED fitted codebook all batches share
-    (pipeline/codebook.py) — cell assignments are only comparable under
-    one codebook, exactly as in the single-tier semantic sink.
+    Every index root is manifest-addressed (storage.py) on the q91
+    lifecycle: each batch publishes a ``delta_v{batch}`` of its admitted
+    docs, a batch matches only against deltas STRICTLY BEFORE it, so a
+    crash between any of the publishes just redelivers the batch and
+    every manifest re-commit replaces rather than duplicates (pinned by
+    tests/test_streaming.py::test_ingest_batch_redelivery_is_idempotent).
+    Constructing the sink ACQUIRES every root it writes (writer fencing,
+    storage.py): a later sink over the same roots fences this one — its
+    next publish hard-errors with nothing committed.
 
-    Decisions schema: ``(doc_id, admitted, matched_id, score, tier)``.
-    ``tier`` ∈ {'exact', 'near_dup', 'semantic', NULL=admitted};
-    ``score`` is tier-typed — 1.0 for exact, the verified Jaccard for
-    near_dup, the exact cosine for semantic, 0.0 for admitted (the
-    two-tier sink's ``jaccard`` column generalized, since the third
-    tier's metric is not a Jaccard).
+    Parameters (each front takes the subset its tiers need):
 
-    Edge policies (each pinned in tests/test_streaming.py):
-    - A NULL or zero-norm embedding has no cosine neighborhood
-      (similarity._norms_spark): the doc can never be semantic-rejected
-      and is never written to the semantic index — it remains fully
-      subject to the exact and MinHash tiers, so unembedded docs degrade
-      to the two-tier cascade rather than erroring.
-    - Tier precedence is strict: an exact-rejected doc never consults
-      the later tiers (its matched_id is the smallest byte-identical
-      index id even when a semantically closer index doc exists).
-    - Within-batch self-dedup stays upstream (q31/q102), as in every
-      sink in this module.
-
-    The semantic index manifest records the codebook's fingerprint;
-    every batch checks it BEFORE any publish (see
-    make_semantic_ingest_batch_fn / reindex_semantic_root).
-
-    ``fp_distinct`` / ``intra_batch_exact``: the exact tier's hot-fp
-    guard and the opt-in within-batch byte-identical pre-dedup — exactly
-    as documented on make_cascade_ingest_batch_fn (fp_distinct is
-    decision-lossless by the min(id1) rule; intra_batch_exact runs after
-    the index tier and is stricter by design).
-
-    ``benchmark_span_index`` (round 9, library-first): the opt-in
-    DECONTAMINATION tier — the streaming counterpart of q105's batch
-    span-trim stage. A persisted ``span_dedup.span_index`` artifact of
-    the benchmark/eval corpus (built once per benchmark release, exactly
-    like ``centroids`` — a static frame, no delta lifecycle) is
-    span-checked against the docs every DEDUP tier admitted: a doc whose
-    contaminated-token fraction (span_dedup.span_contamination) reaches
-    ``cont_threshold`` is rejected with tier 'contaminated' and
-    score = cont_frac; its matched_id is -1 — uniquely for this tier the
-    reject has no corpus counterpart (the hit is benchmark-side), which
-    the decisions schema states here once. Runs LAST (contamination is
-    orthogonal to dedup; a contaminated re-fetch is cheaper to reject as
-    a dup) and only over full survivors, so its per-batch cost is one
-    batch-side tokenize/shingle + a semi-join against the (distinct,
-    usually broadcastable) span-hash column — O(batch). Rejected docs
-    are NOT indexed by any tier, exactly like dup rejects; admission
-    REJECTS rather than trims (the trim form stays the batch-side
-    deliverable, sampling.training_corpus). None (default) keeps the
-    cascade exactly three-tier.
-
-    ``quality_gate`` (round 10): the opt-in per-doc QUALITY tier, run
-    FIRST — exactly as documented on make_cascade_ingest_batch_fn (the
-    gate is index-free and identical in both sinks).
-
-    ``phash_index_root`` (round 11, library-first — the q109 tier): the
-    opt-in MULTIMODAL near-dup tier between the exact and MinHash tiers
-    (cheaper than shingling: one Arrow hash pass + a 9-keys/doc band
-    join). The persisted index is ``multimodal_dedup.phash_index``'s
-    (doc_id, phash) — 16 bytes/doc — on the same delta/manifest
-    lifecycle as the other tiers; a re-encoded/retouched copy of an
-    indexed doc (small Hamming distance, shared bytes NOT required) is
-    rejected with tier 'media_dup', matched_id = the lowest matching
-    index doc_id, and score = (32 − hamming)/32 (the tier-typed
-    similarity, ≥ 0.875 at the ≤ 4-bit threshold). NULL and zero-length
-    payloads have no pixels, hence no phash: such docs are invisible to
-    this tier (never phash-rejected, never phash-indexed) and stay
-    fully subject to every other tier — the multimodal family's
-    no-bytes-no-media policy. ``phash_band_cap`` bounds adversarial hot
-    bands via cap_banded at match time, with cap_banded's documented
-    semantics exactly: every reported match is REAL (a genuine index doc
-    within the Hamming threshold), but under adversarial saturation —
-    lower-id non-matching docs filling every band the true best match
-    occupies — matched_id can shift to a retained member, and row-level
-    subset-of-uncapped is NOT guaranteed (pinned both ways by
-    tests/test_multimodal_dedup_props.py::
-    test_phash_match_batch_cap_shifts_matched_id_under_saturation). Scale note: the band frame is derived from the
-    (doc_id, phash) index per batch — a projection+explode of a
-    16-byte row; if profiles ever show that derivation dominating, the
-    sig_bands_root pattern (persisted banded layout, cap at compaction)
-    applies verbatim. None (default) keeps the cascade exactly as
-    before. ``phash_cells``/``phash_bands`` (round 13) select the grid
-    width PER ROOT (multimodal_dedup.phash_params; default the module
-    32/4) — a 100 TB deployment passes phash_cells=64, the SCALING.md
-    birthday-mass lever; the manifest's phash_config stamp hard-fails
-    any mixed-width pairing either way."""
-    from pyspark.sql.window import Window
-
-    from mapreduce_framework_spark.pipeline.codebook import codebook_fingerprint
-    from mapreduce_framework_spark.pipeline.dedup import (
-        banded_signatures,
-        cap_banded,
-        cap_fingerprints,
-        exact_fingerprint_index,
-        exact_match_batch,
-        index_signatures,
-        match_batch,
+    - ``fp_index_root`` — the exact tier: md5-fingerprint equi-join
+      (pipeline/dedup.py:exact_match_batch); ``matched_id`` is the
+      smallest byte-identical index doc. ``fp_distinct`` (default True,
+      decision-lossless by the min(id1) rule — pipeline/dedup.py:
+      cap_fingerprints) keeps one min-doc_id row per fingerprint in every
+      delta and compaction, so a boilerplate cluster cannot pile rows
+      behind one join key.
+    - ``sig_index_root`` / ``threshold`` / ``shingler`` — the MinHash
+      near_dup tier (pipeline/dedup.py:match_batch); ``matched_id`` is the
+      highest-Jaccard index doc, ties to the lowest id. ``shingler`` is
+      the shingle builder shared by index and match (default word
+      shingles; ``char_shingles_of`` + ``CHAR_JACCARD_THRESHOLD`` for the
+      character-8-gram tier).
+    - ``sig_bands_root`` — the PERSISTED BANDED LAYOUT of the signature
+      index (pipeline/dedup.py:banded_signatures) on the same lifecycle:
+      matching joins the narrow band table instead of re-deriving bands
+      per batch (~5.8× less per-batch index scan, SCALING.md). Decisions
+      are byte-identical either way; a bands root whose coverage diverges
+      from the signature root is a hard error before any match runs.
+      ``band_cap`` (requires ``sig_bands_root``): every compaction of the
+      bands root re-bounds each (band, bsig) group to its cap lowest-doc_id
+      rows (pipeline/dedup.py:cap_banded has the recall argument).
+    - ``sem_index_root`` / ``centroids`` / ``cos_threshold`` (default
+      SEMDEDUP_COS) — the semantic tier (pipeline/semantic_dedup.py:
+      semantic_match_batch) for paraphrases that share no shingles.
+      ``centroids`` is the FIXED fitted codebook every batch shares; the
+      index manifest records its fingerprint and every batch checks it
+      BEFORE publishing anything (a stale index after refit_codebook is a
+      hard error — run reindex_semantic_root). Each batch also logs its
+      quantization error under the codebook into the manifest
+      (needs_refit / refresh_semantic_root_if_needed read the trend). A
+      NULL or zero-norm embedding has no cosine neighborhood: the doc is
+      never semantic-rejected nor semantic-indexed and stays subject to
+      every other tier. ``cell_cap``: every compaction re-bounds each cell
+      to its cap lowest-vec_id rows (pipeline/semantic_dedup.py:cap_cells).
+    - ``phash_index_root`` — the MULTIMODAL media_dup tier
+      (pipeline/multimodal_dedup.py:phash_match_batch): a re-encoded or
+      retouched copy of an indexed doc (small Hamming distance between
+      perceptual hashes; shared bytes not required) is rejected against
+      the lowest matching index doc. NULL and zero-length payloads have no
+      phash: invisible to this tier, subject to every other one.
+      ``phash_cells``/``phash_bands`` select the grid width per root
+      (multimodal_dedup.phash_params; default 32/4 — a 100 TB deployment
+      passes phash_cells=64, SCALING.md); the manifest's phash_config
+      stamp hard-fails a mixed-width pairing before any publish, even at
+      batch 0. ``phash_band_cap`` bounds hot bands via cap_banded at match
+      time: every reported match is real, but under adversarial
+      saturation matched_id can shift to a retained member (pinned by
+      tests/test_multimodal_dedup_props.py). The three phash settings
+      require ``phash_index_root``.
+    - ``quality_gate`` — the per-doc QUALITY tier
+      (pipeline/quality.py:quality_rejects), run FIRST: it needs no index
+      and keeps junk out of every index.
+    - ``intra_batch_exact`` (default False; within-batch dedup is
+      otherwise upstream's job) — among batch docs whose fingerprint is
+      new to the corpus, every copy but the lowest doc_id (the batch
+      REPRESENTATIVE) is rejected with tier 'exact' and matched_id = the
+      representative. The representative may itself be rejected by a
+      later tier, so this matched_id is not necessarily an indexed doc.
+    - ``benchmark_span_index`` / ``cont_threshold`` — the
+      DECONTAMINATION tier, run LAST over full survivors: a doc whose
+      contaminated-token fraction against the persisted benchmark
+      ``span_dedup.span_index`` reaches ``cont_threshold`` is rejected
+      (tier 'contaminated'). Admission rejects rather than trims.
+    - ``compact_every`` — fold each root's delta tail into one compacted
+      dir once it reaches this many entries (None = never; decisions are
+      byte-identical either way). The caps apply at compaction, so a cap
+      with ``compact_every=None`` is a hard error."""
+    return _admission_core(
+        spark, decisions_root, compact_every,
+        quality_gate=quality_gate, fp_index_root=fp_index_root,
+        fp_distinct=fp_distinct, intra_batch_exact=intra_batch_exact,
+        phash_index_root=phash_index_root, phash_band_cap=phash_band_cap,
+        phash_cells=phash_cells, phash_bands=phash_bands,
+        sig_index_root=sig_index_root, threshold=threshold, shingler=shingler,
+        sig_bands_root=sig_bands_root, band_cap=band_cap,
+        sem_index_root=sem_index_root, centroids=centroids,
+        cos_threshold=cos_threshold, cell_cap=cell_cap,
+        benchmark_span_index=benchmark_span_index, cont_threshold=cont_threshold,
     )
-    from mapreduce_framework_spark.pipeline.semantic_dedup import (
-        SEMDEDUP_COS,
-        cap_cells,
-        semantic_index,
-        semantic_match_batch,
-    )
-
-    if cos_threshold is None:
-        cos_threshold = SEMDEDUP_COS
-    cb_fp = codebook_fingerprint(centroids)
-    if band_cap is not None and sig_bands_root is None:
-        raise ValueError(
-            "band_cap requires sig_bands_root (the persisted banded layout)"
-        )
-    _require_compaction_for_caps(compact_every, band_cap=band_cap, cell_cap=cell_cap)
-    bands_transform = (
-        None if band_cap is None else (lambda df: cap_banded(df, band_cap))
-    )
-    cells_transform = (
-        None if cell_cap is None else (lambda df: cap_cells(df, cell_cap))
-    )
-    fp_transform = cap_fingerprints if fp_distinct else None
-    # writer fencing (see make_ingest_batch_fn / storage.py)
-    ep_fp = acquire_index_root(fp_index_root)
-    ep_sig = acquire_index_root(sig_index_root)
-    ep_sem = acquire_index_root(sem_index_root)
-    ep_dec = acquire_index_root(decisions_root)
-    ep_bands = (
-        acquire_index_root(sig_bands_root) if sig_bands_root is not None else None
-    )
-    ep_ph = (
-        acquire_index_root(phash_index_root)
-        if phash_index_root is not None
-        else None
-    )
-    ph_fp = None
-    if phash_index_root is not None:
-        from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-            phash_fingerprint,
-            phash_params,
-        )
-
-        # resolve the width ONCE at construction (fail-fast on a bad
-        # pair) — the sink holds exactly one grid config for its life
-        phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
-        ph_fp = phash_fingerprint(phash_cells, phash_bands)
-
-    def _sem_side(docs: DataFrame) -> DataFrame:
-        # NULL embeddings are invisible to the semantic tier (policy
-        # above); zero-norm ones are excluded downstream by _norms_spark.
-        return docs.where(F.col("embedding").isNotNull()).select(
-            F.col("doc_id").alias("vec_id"), "embedding"
-        )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _require_codebook(sem_index_root, cb_fp)
-        if phash_index_root is not None:
-            # unconditional, like _require_codebook above: a batch-0
-            # restart over an existing root must fail on a width
-            # mismatch before publishing anything (round-12 ADVICE)
-            _require_phash_config(phash_index_root, ph_fp)
-        batch = batch_df.localCheckpoint(eager=True)  # read the source once
-
-        qual_best = None
-        live = batch
-        if quality_gate:
-            from mapreduce_framework_spark.pipeline.quality import (
-                quality_rejects,
-            )
-
-            qual_best = (
-                quality_rejects(batch)
-                .select("doc_id", F.col("q_frac").alias("ql_frac"))
-                .localCheckpoint(eager=True)
-            )
-            live = batch.join(qual_best, "doc_id", "left_anti")
-
-        fp_idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
-        if fp_idx is None:
-            exact_best = None
-            survivors = live
-        else:
-            exact_best = (
-                exact_match_batch(fp_idx, live)
-                .groupBy("id2")
-                .agg(F.min("id1").alias("ex_id"))
-                .select(F.col("id2").alias("doc_id"), "ex_id")
-                .localCheckpoint(eager=True)
-            )
-            survivors = live.join(exact_best, "doc_id", "left_anti")
-
-        intra_best = None
-        if intra_batch_exact:
-            intra_best = _intra_batch_exact_best(survivors)
-            survivors = survivors.join(intra_best, "doc_id", "left_anti")
-
-        ph_best = None
-        if phash_index_root is not None:
-            ph_idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
-            if ph_idx is not None:
-                from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                    phash_match_batch,
-                )
-
-                ph_best = (
-                    phash_match_batch(
-                        ph_idx,
-                        survivors.select("doc_id", "text"),
-                        band_cap=phash_band_cap,
-                        cells=phash_cells,
-                        bands=phash_bands,
-                    )
-                    .select(
-                        "doc_id",
-                        F.col("matched_id").alias("ph_id"),
-                        (
-                            (F.lit(phash_cells) - F.col("hamming"))
-                            / F.lit(float(phash_cells))
-                        ).alias("ph_sim"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                survivors = survivors.join(ph_best, "doc_id", "left_anti")
-
-        sig_idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
-        if sig_idx is None:
-            near_best = None
-            survivors2 = survivors
-        else:
-            w = Window.partitionBy("id2").orderBy(
-                F.col("jaccard").desc(), F.col("id1").asc()
-            )
-            if sig_bands_root is not None:
-                _check_bands_coverage(
-                    sig_index_root, sig_bands_root, before_batch=batch_id
-                )
-                sig_bands = _index_so_far(
-                    spark, sig_bands_root, before_batch=batch_id
-                )
-            else:
-                sig_bands = None
-            near_best = (
-                match_batch(
-                    sig_idx, survivors, threshold, shingler, index_bands=sig_bands
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("id2").alias("doc_id"),
-                    F.col("id1").alias("nd_id"),
-                    F.col("jaccard").alias("nd_jaccard"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            survivors2 = survivors.join(near_best, "doc_id", "left_anti")
-
-        sem_idx = _index_so_far(spark, sem_index_root, before_batch=batch_id)
-        if sem_idx is None:
-            sem_best = None
-            admitted = survivors2
-        else:
-            ws = Window.partitionBy("new_id").orderBy(
-                F.col("cos").desc(), F.col("index_id").asc()
-            )
-            sem_best = (
-                semantic_match_batch(
-                    sem_idx, _sem_side(survivors2), centroids, cos_threshold
-                )
-                .withColumn("rn", F.row_number().over(ws))
-                .where(F.col("rn") == 1)
-                .select(
-                    F.col("new_id").alias("doc_id"),
-                    F.col("index_id").alias("sm_id"),
-                    F.col("cos").alias("sm_cos"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            admitted = survivors2.join(sem_best, "doc_id", "left_anti")
-
-        cont_best = None
-        if benchmark_span_index is not None:
-            from mapreduce_framework_spark.pipeline.span_dedup import (
-                span_contamination,
-            )
-
-            cont_best = (
-                span_contamination(
-                    benchmark_span_index, admitted.select("doc_id", "text")
-                )
-                .where(F.col("cont_frac") >= cont_threshold)
-                .select("doc_id", F.col("cont_frac").alias("ct_frac"))
-                .localCheckpoint(eager=True)
-            )
-            admitted = admitted.join(cont_best, "doc_id", "left_anti")
-
-        decisions = batch.select("doc_id")
-        if qual_best is not None:
-            decisions = decisions.join(qual_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ql_frac", F.lit(None).cast("double")
-            )
-        if exact_best is not None:
-            decisions = decisions.join(exact_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ex_id", F.lit(None).cast("long"))
-        if intra_best is not None:
-            decisions = decisions.join(intra_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn("ib_id", F.lit(None).cast("long"))
-        if ph_best is not None:
-            decisions = decisions.join(ph_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ph_id", F.lit(None).cast("long")
-            ).withColumn("ph_sim", F.lit(None).cast("double"))
-        if near_best is not None:
-            decisions = decisions.join(near_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "nd_id", F.lit(None).cast("long")
-            ).withColumn("nd_jaccard", F.lit(None).cast("double"))
-        if sem_best is not None:
-            decisions = decisions.join(sem_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "sm_id", F.lit(None).cast("long")
-            ).withColumn("sm_cos", F.lit(None).cast("double"))
-        if cont_best is not None:
-            decisions = decisions.join(cont_best, "doc_id", "left")
-        else:
-            decisions = decisions.withColumn(
-                "ct_frac", F.lit(None).cast("double")
-            )
-        # ex_id / ib_id are mutually exclusive (intra-batch dedup runs on
-        # the index tier's survivors); ct_frac only on full survivors;
-        # ql_frac excludes a doc from every later tier (quality runs first)
-        ex_any = F.col("ex_id").isNotNull() | F.col("ib_id").isNotNull()
-        ql = F.col("ql_frac").isNotNull()
-        decisions = decisions.select(
-            "doc_id",
-            (
-                ~ql
-                & ~ex_any
-                & F.col("ph_id").isNull()
-                & F.col("nd_id").isNull()
-                & F.col("sm_id").isNull()
-                & F.col("ct_frac").isNull()
-            ).alias("admitted"),
-            F.coalesce("ex_id", "ib_id", "ph_id", "nd_id", "sm_id", F.lit(-1))
-            .cast("long")
-            .alias("matched_id"),
-            F.when(ql, F.col("ql_frac"))
-            .when(ex_any, F.lit(1.0))
-            .when(F.col("ph_id").isNotNull(), F.col("ph_sim"))
-            .when(F.col("nd_id").isNotNull(), F.col("nd_jaccard"))
-            .when(F.col("sm_id").isNotNull(), F.col("sm_cos"))
-            .otherwise(F.coalesce("ct_frac", F.lit(0.0)))
-            .alias("score"),
-            F.when(ql, F.lit("quality"))
-            .when(ex_any, F.lit("exact"))
-            .when(F.col("ph_id").isNotNull(), F.lit("media_dup"))
-            .when(F.col("nd_id").isNotNull(), F.lit("near_dup"))
-            .when(F.col("sm_id").isNotNull(), F.lit("semantic"))
-            .when(F.col("ct_frac").isNotNull(), F.lit("contaminated"))
-            .alias("tier"),
-        )
-        # round 13 (guide §2.3/§2.6): `admitted` feeds FOUR index deltas
-        # (fp / signatures / phash / semantic) — materialize its anti-join
-        # chain once instead of re-executing it inside every publish, then
-        # run the five per-root publish chains concurrently (each is a
-        # small independent write job; see _run_publish_chains for why
-        # cross-root order carries no invariant).
-        admitted = admitted.localCheckpoint(eager=True)
-        sig_delta = index_signatures(admitted, shingler)
-        if sig_bands_root is not None:
-            sig_delta = sig_delta.localCheckpoint(eager=True)
-
-        def _chain_decisions():
-            _publish_delta(
-                spark, decisions_root, batch_id, decisions, compact_every,
-                epoch=ep_dec,
-            )
-
-        def _chain_fp():
-            _publish_delta(
-                spark, fp_index_root, batch_id,
-                exact_fingerprint_index(admitted, distinct=fp_distinct),
-                compact_every, epoch=ep_fp,
-                compact_transform=fp_transform,
-            )
-
-        def _chain_sig():
-            _publish_delta(
-                spark, sig_index_root, batch_id, sig_delta, compact_every,
-                epoch=ep_sig,
-            )
-            if sig_bands_root is not None:
-                _publish_delta(
-                    spark, sig_bands_root, batch_id, banded_signatures(sig_delta),
-                    compact_every, epoch=ep_bands,
-                    compact_transform=bands_transform,
-                )
-
-        _chain_ph = None
-        if phash_index_root is not None:
-            from mapreduce_framework_spark.pipeline.multimodal_dedup import (
-                phash_index,
-            )
-
-            def _chain_ph():
-                _publish_delta(
-                    spark,
-                    phash_index_root,
-                    batch_id,
-                    phash_index(
-                        admitted.select("doc_id", "text"), cells=phash_cells
-                    ),
-                    compact_every,
-                    epoch=ep_ph,
-                )
-                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
-
-        def _chain_sem():
-            _publish_delta(
-                spark,
-                sem_index_root,
-                batch_id,
-                semantic_index(_sem_side(admitted), centroids),
-                compact_every,
-                epoch=ep_sem,
-                compact_transform=cells_transform,
-            )
-            _stamp_codebook(sem_index_root, cb_fp, epoch=ep_sem)
-            # drift trigger (see make_semantic_ingest_batch_fn): the
-            # statistic is over every embedded doc of the batch,
-            # regardless of tier
-            _log_drift(
-                sem_index_root,
-                batch_id,
-                _batch_quantization_error(_sem_side(batch), centroids),
-                epoch=ep_sem,
-            )
-
-        _run_publish_chains(
-            _chain_decisions, _chain_fp, _chain_sig, _chain_ph, _chain_sem
-        )
-
-    return apply_batch
 
 
 def run_full_cascade_ingest_stream(
@@ -1975,59 +1391,20 @@ def run_full_cascade_ingest_stream(
     phash_cells: int | None = None,
     phash_bands: int | None = None,
 ) -> DataFrame:
-    """Drive a ``(doc_id, text, embedding)`` stream through the
-    three-tier admission sink; returns the union of all per-batch
-    decision frames. ``sig_bands_root`` maintains the persisted banded
-    layout for the MinHash tier, exactly as in run_ingest_stream;
-    ``band_cap``/``cell_cap`` are the hot-key skew guards (re-applied at
-    every compaction of the bands / semantic roots);
-    ``fp_distinct``/``intra_batch_exact`` are the exact tier's hot-fp
-    guard and within-batch pre-dedup; ``benchmark_span_index`` adds the
-    opt-in decontamination tier and ``phash_index_root`` the opt-in
-    multimodal 'media_dup' tier, with ``phash_cells``/``phash_bands``
-    the per-root grid width (all on make_full_cascade_ingest_batch_fn)."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_full_cascade_ingest_batch_fn(
-                spark,
-                fp_index_root,
-                sig_index_root,
-                sem_index_root,
-                decisions_root,
-                centroids,
-                threshold,
-                cos_threshold,
-                shingler,
-                compact_every,
-                sig_bands_root,
-                band_cap,
-                cell_cap,
-                fp_distinct,
-                intra_batch_exact,
-                benchmark_span_index,
-                cont_threshold,
-                quality_gate,
-                phash_index_root,
-                phash_band_cap,
-                phash_cells,
-                phash_bands,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive a ``(doc_id, text, embedding)`` stream through
+    :func:`make_full_cascade_ingest_batch_fn`; returns the union of all
+    per-batch decision frames."""
+    fn = make_full_cascade_ingest_batch_fn(
+        spark, fp_index_root, sig_index_root, sem_index_root, decisions_root,
+        centroids, threshold, cos_threshold, shingler, compact_every,
+        sig_bands_root, band_cap, cell_cap, fp_distinct, intra_batch_exact,
+        benchmark_span_index, cont_threshold, quality_gate, phash_index_root,
+        phash_band_cap, phash_cells, phash_bands,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"full-cascade ingest stream did not finish in {timeout_s}s"
-        )
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions
+    return _run_ingest_stream(
+        docs_stream, spark, decisions_root, checkpoint, timeout_s, fn,
+        "full-cascade ingest",
+    )
 
 
 def admission_report_frame(decisions: DataFrame) -> DataFrame:
@@ -2105,74 +1482,3 @@ def admission_report(spark: SparkSession, decisions_root: str) -> DataFrame:
     if dec is None:
         raise ValueError(f"no decisions committed under {decisions_root}")
     return admission_report_frame(dec)
-
-
-def run_cascade_ingest_stream(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    fp_index_root: str,
-    sig_index_root: str,
-    decisions_root: str,
-    checkpoint: str,
-    threshold: float,
-    timeout_s: int = 300,
-    shingler=None,
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-    sig_bands_root: str | None = None,
-    band_cap: int | None = None,
-    fp_distinct: bool = True,
-    intra_batch_exact: bool = False,
-    benchmark_span_index: DataFrame | None = None,
-    cont_threshold: float = 0.05,
-    quality_gate: bool = False,
-    phash_index_root: str | None = None,
-    phash_band_cap: int | None = None,
-    phash_cells: int | None = None,
-    phash_bands: int | None = None,
-) -> DataFrame:
-    """Drive the document stream through the tiered admission sink;
-    returns the union of all per-batch decision frames. ``sig_bands_root``
-    maintains the persisted banded layout for the MinHash tier, exactly
-    as in run_ingest_stream; ``band_cap`` is the hot-band skew guard;
-    ``fp_distinct``/``intra_batch_exact`` are the exact tier's hot-fp
-    guard and within-batch pre-dedup; ``benchmark_span_index``/
-    ``cont_threshold`` the opt-in lexical decontamination tier and
-    ``phash_index_root`` the opt-in multimodal 'media_dup' tier, with
-    ``phash_cells``/``phash_bands`` the per-root grid width
-    (make_cascade_ingest_batch_fn)."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            make_cascade_ingest_batch_fn(
-                spark,
-                fp_index_root,
-                sig_index_root,
-                decisions_root,
-                threshold,
-                shingler,
-                compact_every,
-                sig_bands_root,
-                band_cap,
-                fp_distinct,
-                intra_batch_exact,
-                benchmark_span_index,
-                cont_threshold,
-                quality_gate,
-                phash_index_root,
-                phash_band_cap,
-                phash_cells,
-                phash_bands,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"cascade ingest stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
-    if decisions is None:
-        raise ValueError(
-            f"stream processed no batches — no decisions under {decisions_root}"
-        )
-    return decisions

@@ -1,7 +1,7 @@
 """Round-14 optimization pins (OPTIMIZATION_r14.md).
 
 Focused tests for the operator internals this round touched:
-- the publish-chain pool-width knob (SPARK_GRAFT_PUBLISH_CONCURRENCY),
+- the concurrent publish chains (every live chain on a pool thread),
 - the bucketed banded-index layout (publish/match identity + plan shape),
 - q88's per-row top-2-gram rewrite (equivalence vs the pre-r14
   distributed shape on clean/empty/NULL/tie-heavy inputs + plan shape),
@@ -10,9 +10,9 @@ Focused tests for the operator internals this round touched:
 
 from __future__ import annotations
 
-import os
 import re
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,35 +20,35 @@ from pyspark.sql import functions as F
 from mapreduce_framework_spark.catalog import table
 
 
-def test_publish_chain_width_env_knob(monkeypatch):
-    """width<=1 runs chains sequentially on the caller thread; the default
-    (unset) runs them concurrently (pool threads), and every chain runs
-    either way."""
+def test_publish_chains_run_on_pool_threads():
+    """Every live chain runs on a pool thread, None chains are skipped,
+    and the first failure re-raises only after every chain has settled."""
     from mapreduce_framework_spark.streaming.ingest import _run_publish_chains
 
-    seen: list[str] = []
+    seen: list[tuple[str, bool]] = []
+    settled = threading.Event()
 
     def mk(tag):
         def chain():
-            seen.append(f"{tag}:{threading.current_thread() is threading.main_thread()}")
+            seen.append((tag, threading.current_thread() is threading.main_thread()))
 
         return chain
 
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", "1")
-    seen.clear()
-    _run_publish_chains(mk("a"), mk("b"), mk("c"))
-    assert sorted(seen) == ["a:True", "b:True", "c:True"]
+    _run_publish_chains(mk("a"), None, mk("b"), mk("c"), None)
+    assert sorted(seen) == [("a", False), ("b", False), ("c", False)]
 
-    monkeypatch.delenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", raising=False)
-    seen.clear()
-    _run_publish_chains(mk("a"), mk("b"), mk("c"))
-    assert sorted(s.split(":")[0] for s in seen) == ["a", "b", "c"]
-    assert all(s.endswith("False") for s in seen)  # pool threads
+    def boom():
+        raise RuntimeError("chain failed")
 
-    monkeypatch.setenv("SPARK_GRAFT_PUBLISH_CONCURRENCY", "not-an-int")
+    def slow():
+        time.sleep(0.2)
+        settled.set()
+
     seen.clear()
-    _run_publish_chains(mk("a"), mk("b"))
-    assert sorted(s.split(":")[0] for s in seen) == ["a", "b"]
+    with pytest.raises(RuntimeError, match="chain failed"):
+        _run_publish_chains(boom, slow, mk("d"))
+    assert settled.is_set()  # the failure surfaced after the slow chain
+    assert seen == [("d", False)]
 
 
 def test_bench_compact_line_fits_driver_tail_capture():
@@ -166,10 +166,14 @@ def test_bucketed_bands_probe_side_has_no_exchange(spark, banded_fixture):
         str(fx["root"] / "bands_bucketed_plan"),
         n_buckets=8,
     )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        for k in keys:
+            spark.conf.set(k, "-1")
 
         def band_exchanges(bands):
             df = match_batch(fx["idx"], fx["new_docs"], index_bands=bands)
@@ -182,10 +186,11 @@ def test_bucketed_bands_probe_side_has_no_exchange(spark, banded_fixture):
             spark.table("t_r14_bands_bucketed_plan")
         )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", old_thresh
-        )
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     # The candidate-join subtree can appear k times in the executed plan
     # (the verify semi-joins re-derive candidates when AQE does not reuse
     # the stage); plain pays 2 band exchanges per appearance (both sides),

@@ -1776,6 +1776,82 @@ def _run_full_cascade(spark, tmp_path, dfs, cents, prefix="fc", **kw):
     return roots, fn
 
 
+_SINK_SCHEMAS = {
+    "minhash": (
+        [("doc_id", "bigint"), ("admitted", "boolean"),
+         ("matched_id", "bigint"), ("jaccard", "double")],
+        {10: (False, 1, None), 11: (False, 2, None)},
+    ),
+    "semantic": (
+        [("vec_id", "bigint"), ("admitted", "boolean"),
+         ("matched_id", "bigint"), ("cos", "double")],
+        {10: (False, 2, None), 11: (False, 3, None), 12: (False, 1, None)},
+    ),
+    "cascade": (
+        [("doc_id", "bigint"), ("admitted", "boolean"),
+         ("matched_id", "bigint"), ("jaccard", "double"), ("tier", "string")],
+        {10: (False, 1, "exact"), 11: (False, 2, "near_dup")},
+    ),
+    "full_cascade": (
+        [("doc_id", "bigint"), ("admitted", "boolean"),
+         ("matched_id", "bigint"), ("score", "double"), ("tier", "string")],
+        {10: (False, 1, "exact"), 11: (False, 2, "near_dup"),
+         12: (False, 1, "semantic")},
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_SINK_SCHEMAS))
+def test_sink_decision_schemas(spark, tmp_path, sink):
+    """Each public sink front writes its own on-disk decisions schema —
+    column names, order and Spark types — both for a batch with nothing
+    to match (batch 0, empty index) and for a batch whose tiers hit
+    (batch 1: an exact re-fetch of doc 1 and a near-dup of doc 2), and
+    reports the first tier that hit in ``tier``. Every doc not listed as
+    rejected is admitted with matched_id -1 and a NULL tier."""
+    from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
+    from mapreduce_framework_spark.streaming.ingest import (
+        delta_dir,
+        make_cascade_ingest_batch_fn,
+        make_full_cascade_ingest_batch_fn,
+        make_ingest_batch_fn,
+        make_semantic_ingest_batch_fn,
+    )
+
+    cents, dfs = _full_cascade_fixture(spark)
+    dfs = dfs[:2]
+    r = {k: str(tmp_path / k) for k in ["fp", "sig", "sem", "dec"]}
+    if sink == "minhash":
+        fn = make_ingest_batch_fn(spark, r["sig"], r["dec"], JACCARD_THRESHOLD)
+        dfs = [d.select("doc_id", "text") for d in dfs]
+    elif sink == "semantic":
+        fn = make_semantic_ingest_batch_fn(spark, r["sem"], r["dec"], cents)
+        dfs = [d.select(F.col("doc_id").alias("vec_id"), "embedding") for d in dfs]
+    elif sink == "cascade":
+        fn = make_cascade_ingest_batch_fn(
+            spark, r["fp"], r["sig"], r["dec"], JACCARD_THRESHOLD
+        )
+        dfs = [d.select("doc_id", "text") for d in dfs]
+    else:
+        fn = make_full_cascade_ingest_batch_fn(
+            spark, r["fp"], r["sig"], r["sem"], r["dec"], cents, JACCARD_THRESHOLD
+        )
+    schema, rejected = _SINK_SCHEMAS[sink]
+    for b, df in enumerate(dfs):
+        fn(df, b)
+    for b, df in enumerate(dfs):
+        dec = spark.read.parquet(delta_dir(r["dec"], b))
+        assert dec.dtypes == schema, (b, dec.dtypes)
+        got = {
+            row[0]: (row["admitted"], row["matched_id"], row.asDict().get("tier"))
+            for row in dec.collect()
+        }
+        want = {
+            row[0]: rejected.get(row[0], (True, -1, None)) for row in df.collect()
+        }
+        assert got == want, (b, got)
+
+
 def test_full_cascade_each_tier_fires(spark, tmp_path):
     """One planted reject per tier with exact expected (admitted, tier,
     matched_id, score) — including strict tier precedence (doc 10) and
@@ -3306,7 +3382,9 @@ def test_intra_batch_exact_pre_dedup(spark, sf_dir, tmp_path):
 def test_caps_require_compaction(spark, tmp_path):
     """Round-9 ADVICE: a hot-key cap with compact_every=None would never
     be applied (caps run at compaction) — every sink that accepts a cap
-    must hard-error instead of silently returning an uncapped index."""
+    must hard-error instead of silently returning an uncapped index. The
+    same holds for a setting whose root is missing: phash_band_cap /
+    phash_cells / phash_bands without phash_index_root."""
     import pytest as _pytest
 
     from mapreduce_framework_spark.pipeline.codebook import fit_codebook
@@ -3352,6 +3430,23 @@ def test_caps_require_compaction(spark, tmp_path):
             str(tmp_path / "m4"), str(tmp_path / "d4"), cents, 0.8,
             compact_every=None, cell_cap=64,
         )
+
+    # the media tier's settings without its root would be silently
+    # ignored (the caller would believe the hot-band guard is on)
+    for i, opt in enumerate(
+        [{"phash_band_cap": 8}, {"phash_cells": 64}, {"phash_bands": 8}]
+    ):
+        with _pytest.raises(ValueError, match="requires phash_index_root"):
+            make_cascade_ingest_batch_fn(
+                spark, str(tmp_path / f"f5{i}"), str(tmp_path / f"s5{i}"),
+                str(tmp_path / f"d5{i}"), 0.8, **opt,
+            )
+        with _pytest.raises(ValueError, match="requires phash_index_root"):
+            make_full_cascade_ingest_batch_fn(
+                spark, str(tmp_path / f"f6{i}"), str(tmp_path / f"s6{i}"),
+                str(tmp_path / f"m6{i}"), str(tmp_path / f"d6{i}"), cents, 0.8,
+                **opt,
+            )
 
 
 def test_zombie_delta_write_cannot_touch_committed_dirs(spark, sf_dir, tmp_path):
