@@ -38,6 +38,7 @@ SHINGLE_K = 3
 JACCARD_THRESHOLD = 0.8
 N_PERMS = 64
 N_BANDS = 16  # 16 bands x 4 rows; P(miss | J>=0.9) ~ 4e-8 per pair
+BAND_BUCKETS = 32  # publish_banded_bucketed's bucket count unless n_buckets is passed
 
 # MinHash "permutations" are 64 independent full-width hash functions:
 # m_i = min(xxhash64(shingle, i)). An earlier form used linear maps
@@ -983,21 +984,19 @@ def publish_banded_bucketed(
     ``n_buckets`` sizes the probe stage's parallelism and per-bucket
     bytes: target the 100 MB–1 GB/bucket band (guide §2.2) — a band
     frame is ~17 raw B/row × 16 rows/doc, so ~4 billion docs/TB of band
-    rows wants thousands of buckets at 100 TB; the local default
-    (SPARK_GRAFT_BAND_BUCKETS, 32) matches the test-scale core count.
+    rows wants thousands of buckets at 100 TB; the default
+    (``BAND_BUCKETS``, 32) matches the test-scale core count.
     Shingle-agnostic like the rest of the lifecycle: the same call
     publishes the word-shingle (q91) and char-shingle (q84 tier) band
     indexes. Catalog note: ``saveAsTable`` registers ``name`` in the
     session catalog with the bucket spec; readers in a NEW session must
     re-register the table (same DDL) — reading the bare parquet path
     still works but degrades to the unbucketed plan."""
-    import os as _os
-
     from mapreduce_framework_spark.storage import write_bucketed
 
-    n = n_buckets or int(_os.environ.get("SPARK_GRAFT_BAND_BUCKETS", "32"))
     write_bucketed(
-        bands, name, path, ["band", "bsig"], n, sort_cols=["band", "bsig", "doc_id"]
+        bands, name, path, ["band", "bsig"], n_buckets or BAND_BUCKETS,
+        sort_cols=["band", "bsig", "doc_id"],
     )
 
 

@@ -173,7 +173,15 @@ def domain_mix_sample(docs: DataFrame) -> DataFrame:
     so the checkpointed bytes are ~24 B/doc (vs re-tokenizing the corpus:
     at 100 TB that is ~100 GB materialized against a second 100 TB
     scan+split pass). A/B at a 30× corpus: ~25% faster
-    (OPTIMIZATION_r14.md §5); plan: 2 parquet scans → 1."""
+    (OPTIMIZATION_r14.md §5); plan: 2 parquet scans → 1.
+
+    Two costs of that eager ``localCheckpoint``: (1) BUILDING the frame
+    runs the corpus scan+tokenize job, even for a caller that only wants
+    its schema or ``explain()``; (2) the checkpointed blocks live only on
+    the executors that computed them, with no lineage behind them, so
+    losing one of those executors before the sample is consumed fails
+    the job instead of recomputing — run it where executors are stable
+    (no aggressive dynamic-allocation scale-down mid-job)."""
     tok = docs.select(
         "doc_id", "source", F.size(F.expr(TOKS_SPARK)).cast("long").alias("n_tokens")
     ).localCheckpoint(eager=True)

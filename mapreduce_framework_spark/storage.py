@@ -90,7 +90,7 @@ def write_range_sorted(
     )
 
 
-# --- incremental-index manifest (streaming/ingest.py lifecycles) -------------
+# --- manifest roots (streaming/ingest.py indexes, streaming/foreach_batch.py state)
 #
 # An incremental index (MinHash signatures, semantic cell assignments) grows
 # one `delta_v{batch}` parquet dir per micro-batch. Addressing the index by
@@ -109,36 +109,47 @@ def write_range_sorted(
 #    "compacted_through": B-1 | -1,            # max batch id folded in
 #    "deltas": [[batch_id, "delta_v{id}"], ...]}  # the UNFOLDED tail, sorted
 #
-# Invariants (validated on every read, hard error on violation — a missing
-# or out-of-sequence delta means index corruption and MUST NOT be silently
-# skipped):
+# Invariants of an INCREMENTAL root (validated on every read, hard error on
+# violation — a missing or out-of-sequence delta means index corruption and
+# MUST NOT be silently skipped):
 #   - tail batch ids are strictly increasing and CONTIGUOUS from
 #     compacted_through+1 (every batch writes a delta, even an empty one);
 #   - every referenced dir exists.
+#
+# A SNAPSHOT root (the merge sinks' state) uses the same manifest, publish
+# and fencing, but each delta is the whole state after its batch: it is
+# never compacted, keeps only its newest deltas (retain_newest_deltas) and
+# is read through latest_delta, never index_so_far.
+#
+# This module is the one owner of the format: the sinks read, publish and
+# stamp roots only through the helpers below, and every read-modify-commit
+# goes through update_index_manifest.
 
 INDEX_MANIFEST = "_manifest.json"  # underscore: invisible to Spark file scans (like _SUCCESS)
+# the merge sinks' own manifest before their state roots became manifest
+# roots: {"version": 1, "versions": [retained batch ids], "epoch": E}, one
+# `state_v{id}` dir per retained version. Adopted on first contact.
+_LEGACY_STATE_MANIFEST = "_state_manifest.json"
 
 # Delta-dir prefixes a PRE-MANIFEST root may contain: the current
-# ``delta_v{batch}`` naming, plus ``d_v{batch}`` — the name the pre-round-7
+# ``delta_v{batch}`` naming, ``d_v{batch}`` — the name the pre-round-7
 # sinks gave DECISION deltas before the decisions log joined the manifest
-# lifecycle. Legacy adoption must recognize both, or resuming an upgraded
-# stream on an old decisions root builds a manifest whose tail starts at
-# the current batch and every historical decision becomes invisible (and
-# the next read hard-errors on the gap).
-_DELTA_PREFIXES = ("delta_v", "d_v")
+# lifecycle — and ``state_v{batch}``, the merge sinks' state snapshots.
+# Legacy adoption must recognize all of them, or resuming an upgraded
+# stream on an old root builds a manifest whose tail starts at the current
+# batch and every historical delta becomes invisible (and the next read
+# hard-errors on the gap).
+_DELTA_PREFIXES = ("delta_v", "d_v", "state_v")
 
 
-def legacy_delta_entries(index_root: str, exclude: tuple = ()) -> list[list]:
+def legacy_delta_entries(index_root: str) -> list[list]:
     """``[batch_id, dirname]`` entries (sorted by batch id) for every delta
     dir under a pre-manifest ``index_root``, recognizing every historical
-    naming in ``_DELTA_PREFIXES``. Used once per root, when the first
-    post-upgrade publish adopts the legacy layout into a manifest (the
-    manifest records dir NAMES, so no renames are needed). If one batch id
-    somehow exists under both namings, the current ``delta_v`` dir wins."""
+    naming in ``_DELTA_PREFIXES`` (the manifest records dir NAMES, so
+    adoption needs no renames). If one batch id somehow exists under
+    several namings, the current ``delta_v`` dir wins."""
     found: dict[int, str] = {}
     for d in os.listdir(index_root):
-        if d in exclude:
-            continue
         for p in _DELTA_PREFIXES:
             if d.startswith(p):
                 suffix = d[len(p):]
@@ -305,14 +316,8 @@ def set_manifest_backend(backend):
 
 def read_manifest_doc(path: str) -> dict | None:
     """Read any manifest-lifecycle JSON document through the installed
-    backend (index manifests, streaming state manifests)."""
+    backend."""
     return _MANIFEST_BACKEND.read(path)
-
-
-def manifest_lock(path: str, timeout_s: float = 30.0):
-    """The installed backend's acquisition lock for ``path`` (context
-    manager) — serializes read-bump-commit acquisition cycles."""
-    return _MANIFEST_BACKEND.lock(path, timeout_s)
 
 
 def commit_manifest(path: str, manifest: dict, expected_epoch: int | None = None) -> None:
@@ -336,9 +341,10 @@ def commit_manifest(path: str, manifest: dict, expected_epoch: int | None = None
 def acquire_index_root(index_root: str, takeover: bool = True) -> int:
     """Acquire ownership of a manifest root and return the new fencing
     token (epoch). Bumping the committed epoch FENCES every earlier
-    owner: their next publish hard-errors in check_index_epoch. A fresh
-    root gets a new manifest (adopting any pre-manifest legacy deltas, so
-    acquisition never hides history); ``takeover=False`` refuses a root
+    owner: their next publish hard-errors in check_index_epoch. A root
+    without a manifest gets one adopting its pre-manifest layout
+    (root_manifest — including a merge-sink state root's epoch, which the
+    bump then fences); ``takeover=False`` refuses a root
     that already has an owner instead of fencing it — the conservative
     mode for operators who expect a virgin root.
 
@@ -349,11 +355,8 @@ def acquire_index_root(index_root: str, takeover: bool = True) -> int:
     path = os.path.join(index_root, INDEX_MANIFEST)
     with _MANIFEST_BACKEND.lock(path):
         for _ in range(16):  # CAS retry bound; the lock makes >1 pass rare
-            man = read_index_manifest(index_root)
-            if man is None:
-                man = new_index_manifest()
-                if os.path.isdir(index_root):
-                    man["deltas"] = legacy_delta_entries(index_root)
+            committed = read_index_manifest(index_root)
+            man = committed if committed is not None else _adopted_manifest(index_root)
             prev = int(man.get("epoch", 0))
             if prev and not takeover:
                 raise ValueError(
@@ -363,7 +366,9 @@ def acquire_index_root(index_root: str, takeover: bool = True) -> int:
                 )
             man["epoch"] = prev + 1
             try:
-                _MANIFEST_BACKEND.commit(path, man, expected_epoch=prev)
+                _MANIFEST_BACKEND.commit(
+                    path, man, expected_epoch=0 if committed is None else prev
+                )
             except ManifestPreconditionFailed:
                 continue  # lost the CAS to a concurrent acquirer: re-read
             return man["epoch"]
@@ -398,6 +403,30 @@ def read_index_manifest(index_root: str) -> dict | None:
     if man is not None and man.get("version") != 1:
         raise ValueError(f"unsupported index manifest version: {man.get('version')!r}")
     return man
+
+
+def _adopted_manifest(index_root: str) -> dict:
+    man = new_index_manifest()
+    state = read_manifest_doc(os.path.join(index_root, _LEGACY_STATE_MANIFEST))
+    if state is not None:
+        man["deltas"] = [[v, f"state_v{v}"] for v in sorted(state["versions"])]
+        if state.get("epoch"):
+            man["epoch"] = int(state["epoch"])
+    elif os.path.isdir(index_root):
+        man["deltas"] = legacy_delta_entries(index_root)
+    return man
+
+
+def root_manifest(index_root: str) -> dict:
+    """The committed manifest, or — for a root that has none — a new,
+    uncommitted one adopting whatever the pre-manifest layout holds (empty
+    for a fresh root), so no read, publish or acquisition ever hides
+    history. THE one legacy fallback: a merge-sink state root's own
+    manifest (its retained versions by their ``state_v{id}`` names, and
+    its fencing epoch), else every legacy delta dir (one POSIX listing;
+    the root's first commit records the adopted entries)."""
+    man = read_index_manifest(index_root)
+    return man if man is not None else _adopted_manifest(index_root)
 
 
 def write_index_manifest(
@@ -519,6 +548,205 @@ def prune_superseded_index_dirs(index_root: str, manifest: dict) -> None:
         ):
             continue
         shutil.rmtree(os.path.join(index_root, entry), ignore_errors=True)
+
+
+def update_index_manifest(
+    index_root: str, change, epoch: int | None = None
+) -> dict | None:
+    """THE read-modify-commit of a root manifest — every publish, stamp,
+    log and swap goes through it. ``change`` receives the current manifest
+    (root_manifest, so a pre-manifest root is adopted by its first commit)
+    and returns the manifest to commit, or None to commit nothing.
+    ``epoch``: the writer's fencing token, enforced at the commit itself
+    (write_index_manifest); None commits unconditionally (library/batch
+    callers that own the root by construction). Returns what was
+    committed."""
+    man = change(root_manifest(index_root))
+    if man is not None:
+        write_index_manifest(index_root, man, expected_epoch=epoch)
+    return man
+
+
+def stamp_manifest_field(
+    index_root: str, field: str, value, epoch: int | None = None
+) -> None:
+    """Record ``value`` under ``field`` if the manifest has no stamp yet
+    (first publish, or a root from before the stamp existed). Never
+    overwrites a differing stamp: a mismatch is require_manifest_field's
+    hard failure, and overwriting here would let a restarted sink under
+    another configuration legitimize a mixed root. A crash before the
+    stamp just redelivers: the require accepts the unstamped manifest and
+    the stamp is rewritten. ``epoch``: a writer fenced since its publish
+    must not clobber the new owner's manifest with its stale snapshot."""
+    update_index_manifest(
+        index_root,
+        lambda man: {**man, field: value} if man.get(field) is None else None,
+        epoch,
+    )
+
+
+def require_manifest_field(
+    index_root: str, field: str, value, what: str, hint: str
+) -> None:
+    """Hard-fail when ``index_root`` carries a ``field`` stamp other than
+    ``value`` — the configuration its rows are only comparable under (a
+    semantic root's codebook fingerprint, a phash root's grid). Sinks run
+    it before the batch publishes anything, even at batch 0: a restart
+    over an existing never-compacted root sees no loaded index, and a
+    load-gated check would let it publish under the new configuration
+    first. An unstamped root is accepted (stamp_manifest_field stamps it
+    at publish)."""
+    man = read_index_manifest(index_root)
+    cur = None if man is None else man.get(field)
+    if cur is not None and cur != value:
+        raise ValueError(
+            f"{what} at {index_root} was built under config {cur} but this "
+            f"sink holds {value} — {hint}"
+        )
+
+
+def index_so_far(
+    spark: SparkSession, index_root: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """The incremental index visible to a batch: every delta from batches
+    STRICTLY BEFORE it (None = all), addressed through the manifest — no
+    listing on a committed root, and a gap or missing dir is a hard error,
+    never a silent partial read. Excluding the batch's own delta is what
+    makes the sinks idempotent under foreachBatch's crash-restart
+    redelivery: a failed attempt may have written it already, and
+    matching against it would self-reject every redelivered doc and then
+    overwrite the delta empty (pinned by
+    tests/test_streaming.py::test_ingest_batch_redelivery_is_idempotent)."""
+    paths = manifest_visible_paths(index_root, root_manifest(index_root), before_batch)
+    if not paths:
+        return None
+    return spark.read.option("recursiveFileLookup", "true").parquet(*paths)
+
+
+def latest_delta(
+    spark: SparkSession, index_root: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """The newest delta of a SNAPSHOT root visible to a batch (strictly
+    before ``before_batch``; None = the newest of all) — the merge sinks'
+    state read. The strictly-before rule makes them idempotent under
+    redelivery: merging a batch on top of its own earlier output would
+    double-count it. A root with history but nothing visible is a HARD
+    error, not an empty state: the checkpoint and the root belong to
+    different streams, and silently starting over would drop state."""
+    deltas = sorted(root_manifest(index_root)["deltas"])
+    visible = [e for e in deltas if before_batch is None or e[0] < before_batch]
+    if not visible:
+        if deltas:
+            raise ValueError(
+                f"root {index_root} retains batches {[b for b, _ in deltas]} but "
+                f"batch {before_batch} needs one strictly below them — "
+                "checkpoint and root belong to different streams"
+            )
+        return None
+    path = os.path.join(index_root, visible[-1][1])
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"manifest references missing dir {path} — refusing to start over "
+            "from an empty state"
+        )
+    return spark.read.parquet(path)
+
+
+def covered_batches(index_root: str, before_batch: int | None = None) -> frozenset:
+    """The batch ids a root's manifest commits (compacted range ∪ tail),
+    restricted to ids below ``before_batch``."""
+    man = root_manifest(index_root)
+    ids = {e[0] for e in man["deltas"]} | set(range(man["compacted_through"] + 1))
+    return frozenset(b for b in ids if before_batch is None or b < before_batch)
+
+
+def delta_dir(index_root: str, batch_id: int) -> str:
+    """The on-disk directory of one batch's (unfolded) delta, resolved
+    through the manifest — the ONLY correct way to address a delta, since
+    fenced writers epoch-suffix their dir names (publish_delta) and the
+    manifest records whatever name the committing writer used."""
+    man = root_manifest(index_root)
+    for b, name in man["deltas"]:
+        if b == batch_id:
+            return os.path.join(index_root, name)
+    raise ValueError(
+        f"batch {batch_id} has no unfolded delta under {index_root} "
+        f"(compacted through {man['compacted_through']})"
+    )
+
+
+def publish_delta(
+    spark: SparkSession,
+    index_root: str,
+    batch_id: int,
+    delta_df: DataFrame,
+    compact_every: int | None,
+    epoch: int | None = None,
+    compact_transform=None,
+) -> None:
+    """Write one batch's delta (admitted-docs index rows, a batch's
+    decision rows, or a merge sink's state snapshot — all share this
+    lifecycle) and commit it to the manifest (the single atomic step),
+    compacting the tail first when it reaches ``compact_every`` dirs.
+    Compaction folds only deltas STRICTLY BELOW ``batch_id`` — the
+    in-flight batch's own delta stays an unfolded tail entry, so a
+    crash-restart redelivery of ``batch_id`` still sees exactly the
+    strictly-before index (pinned by
+    tests/test_streaming.py::test_ingest_redelivery_after_compaction).
+    Superseded dirs are pruned only AFTER the manifest commit: a crash at
+    any point leaves either the old manifest with all its dirs intact or
+    the new manifest with (at worst) unreferenced orphans.
+
+    ``epoch``: the writer's fencing token (acquire_index_root — every
+    streaming sink acquires its roots at construction). Checked before the
+    delta write AND enforced at the manifest commit itself, so a fenced
+    writer (another stream took the root, or this is a zombie retry of a
+    replaced driver) hard-errors without committing anything — never
+    silent last-writer-wins. None = unfenced (library/batch callers that
+    own their root by construction).
+
+    Fenced writers write their delta under an EPOCH-SUFFIXED dir name
+    (``delta_v{batch}_e{epoch}`` — round-9 ADVICE): the pre-write epoch
+    check cannot protect a write that was already under way, so a zombie
+    redelivering a batch id the new owner already committed would
+    otherwise replace parquet files inside a dir the COMMITTED manifest
+    references. With the epoch in the name, a fenced writer can only ever
+    touch dirs no committed manifest references (readers are oblivious:
+    the manifest records names verbatim); the owner's next publish prunes
+    the zombie's orphan. Resolve a batch's dir through :func:`delta_dir`,
+    never by assembling the name."""
+    if epoch is not None:
+        check_index_epoch(index_root, epoch)
+    name = f"delta_v{batch_id}" if epoch is None else f"delta_v{batch_id}_e{epoch}"
+    delta_df.write.mode("overwrite").parquet(os.path.join(index_root, name))
+
+    def commit(man):
+        deltas = [e for e in man["deltas"] if e[0] != batch_id]
+        man = {**man, "deltas": sorted(deltas + [[batch_id, name]])}
+        tail_before = sum(e[0] < batch_id for e in deltas)
+        if compact_every is not None and tail_before >= compact_every:
+            man = compact_index_manifest(
+                spark, index_root, man, below_batch=batch_id,
+                transform=compact_transform,
+            )
+        return man
+
+    prune_superseded_index_dirs(
+        index_root, update_index_manifest(index_root, commit, epoch)
+    )
+
+
+def retain_newest_deltas(index_root: str, keep: int, epoch: int | None = None) -> None:
+    """Trim a SNAPSHOT root's manifest to its newest ``keep`` deltas, then
+    prune the dropped dirs (strictly after the commit, like every prune)."""
+    man = update_index_manifest(
+        index_root,
+        lambda m: {**m, "deltas": sorted(m["deltas"])[-keep:]}
+        if len(m["deltas"]) > keep else None,
+        epoch,
+    )
+    if man is not None:
+        prune_superseded_index_dirs(index_root, man)
 
 
 def parquet_file_column_ranges(path: str, column: str) -> list[tuple]:

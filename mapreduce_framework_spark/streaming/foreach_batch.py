@@ -1,207 +1,87 @@
-"""foreachBatch sink: incremental KV-state materialization to parquet.
+"""foreachBatch sinks: incremental KV-state and rollup materialization.
 
 The third streaming output pattern (alongside the memory/file sinks and
 applyInPandasWithState): ``foreachBatch`` hands each micro-batch to
 arbitrary batch code, here a MERGE of the batch's per-key fold into a
 persisted state table — the standard lakehouse "streaming upsert" shape.
 
-State versions are written as ``state_v{batch_id}`` directories (write-new
-then read-latest), which keeps each batch's write atomic-by-directory the
-same way the reference commits via temp-file + rename
-(src/mr/worker.go:68-75); a table format (Delta/Iceberg) would replace the
-versioned directories with a real MERGE INTO.
+A merge sink's state root is an ordinary MANIFEST ROOT (storage.py), the
+same lifecycle as the ingest indexes of streaming/ingest.py, except that
+each delta is the whole state after its batch rather than an increment:
 
-Round 7: the root is addressed through a STATE MANIFEST (the ingest-index
-discipline of streaming/ingest.py applied to the latest-pointer shape):
-one atomic JSON commit per batch records the retained version numbers, so
-the read path never lists directories (object-storage-safe), and
-retention is bounded — only the last ``STATE_KEEP`` versions survive a
-commit, because the strictly-before redelivery rule only ever needs the
-version just below the in-flight batch. Without retention a 1e5-batch
-stream leaves 1e5 full-state snapshots on disk.
+- constructing a sink ACQUIRES the root (storage.acquire_index_root —
+  writer fencing; a root written before state roots were manifest roots
+  is adopted, epoch included);
+- each batch reads the newest snapshot STRICTLY BEFORE it
+  (storage.latest_delta — redelivering a batch never merges it onto its
+  own output; a root with history but nothing visible is a hard error)
+  and publishes its own through storage.publish_delta: an epoch check
+  before the write, an epoch-suffixed dir, one atomic manifest commit.
+  A fenced writer therefore errors before writing and can never touch a
+  dir the owner committed — the same atomic-rename commit discipline the
+  reference applies to task outputs (src/mr/worker.go:68-75);
+- retention keeps the newest ``STATE_KEEP`` snapshots, because the
+  strictly-before rule only ever needs the one just below the in-flight
+  batch. Without it a 1e5-batch stream leaves 1e5 full-state snapshots.
+
+A table format (Delta/Iceberg) would replace the snapshot dirs with a real
+MERGE INTO.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.storage import (
-    commit_manifest,
-    manifest_lock,
-    read_manifest_doc,
+    acquire_index_root,
+    latest_delta,
+    publish_delta,
+    retain_newest_deltas,
 )
 
-STATE_MANIFEST = "_state_manifest.json"  # underscore: invisible to Spark scans
-# current version + the one a redelivered in-flight batch reads — the only
-# versions the protocol can ever need
+# the current snapshot + the one a redelivered in-flight batch reads — the
+# only snapshots the protocol can ever need
 STATE_KEEP = 2
 
 
-def _latest_state(
-    spark: SparkSession, state_root: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Latest persisted state version — restricted to versions STRICTLY
-    BEFORE ``before_batch`` when merging a batch. That restriction is what
-    makes both merge sinks idempotent under foreachBatch's crash-restart
-    redelivery: a failed attempt may already have written state_v{N}, and
-    merging batch N on top of its own output would double-count it (pinned
-    by tests/test_streaming.py::test_merge_sinks_redelivery_idempotent).
-
-    Manifest-addressed (no directory listing; a root with state dirs but
-    no manifest is the pre-manifest legacy layout — POSIX listdir once,
-    adopted into a manifest at the next commit). Asking for a version
-    strictly below the whole retention window is a HARD ERROR, not an
-    empty state: it means the checkpoint and the state root belong to
-    different streams, and silently re-initializing would drop state."""
-    man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
-    if man is not None:
-        versions = sorted(man["versions"])
-        eligible = (
-            versions
-            if before_batch is None
-            else [v for v in versions if v < before_batch]
-        )
-        if not eligible:
-            if versions and before_batch is not None:
-                raise ValueError(
-                    f"state root retains versions {versions} but batch "
-                    f"{before_batch} needs a version strictly below it — "
-                    "checkpoint and state root belong to different streams"
-                )
-            return None
-        path = os.path.join(state_root, f"state_v{eligible[-1]}")
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"state manifest references missing dir {path} — refusing to "
-                "re-initialize state"
-            )
-        return spark.read.parquet(path)
-    if not os.path.isdir(state_root):
-        return None
-    versions = sorted(
-        (d for d in os.listdir(state_root) if d.startswith("state_v")),
-        key=lambda d: int(d.split("state_v")[1]),
-    )
-    if before_batch is not None:
-        versions = [v for v in versions if int(v.split("state_v")[1]) < before_batch]
-    if not versions:
-        return None
-    return spark.read.parquet(os.path.join(state_root, versions[-1]))
-
-
-def _read_or_adopt_state_manifest(state_root: str) -> dict:
-    """The committed state manifest, adopting a pre-manifest legacy layout
-    (POSIX listdir once) when none exists yet."""
-    man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
-    if man is None:
-        existing = (
-            [
-                int(d.split("state_v")[1])
-                for d in os.listdir(state_root)
-                if d.startswith("state_v")
-            ]
-            if os.path.isdir(state_root)
-            else []
-        )
-        man = {"version": 1, "versions": sorted(set(existing))}
-    return man
-
-
-def _acquire_state_root(state_root: str, takeover: bool = True) -> int:
-    """WRITER FENCING for a state root — the storage.acquire_index_root
-    discipline applied to the latest-pointer manifest: the merge sinks'
-    read-merge-write cycle is exactly as exposed to two-streams-one-root
-    last-writer-wins as the ingest indexes (worse, in fact: a lost state
-    commit silently forks the fold history). Same epoch-token semantics,
-    same ATOMIC acquisition (backend lock + epoch-CAS commit — round-9
-    ADVICE: two concurrent acquirers used to be able to both read N and
-    both commit N+1), same object-storage conditional-PUT mapping
-    through the storage.py commit seam."""
-    path = os.path.join(state_root, STATE_MANIFEST)
-    from mapreduce_framework_spark.storage import (
-        ManifestPreconditionFailed,
-        WriterFenced,
-    )
-
-    with manifest_lock(path):
-        for _ in range(16):
-            man = _read_or_adopt_state_manifest(state_root)
-            prev = int(man.get("epoch", 0))
-            if prev and not takeover:
-                raise ValueError(
-                    f"state root {state_root} is already owned (epoch {prev}) and "
-                    "takeover=False — point this stream at its own root, or pass "
-                    "takeover=True to deliberately fence the current owner"
-                )
-            man["epoch"] = prev + 1
-            try:
-                commit_manifest(path, man, expected_epoch=prev)
-            except (WriterFenced, ManifestPreconditionFailed):
-                # lost the CAS to a concurrent acquirer: re-read. ONLY the
-                # fencing outcomes retry (round-10 ADVICE) — a custom
-                # backend's unrelated ValueError propagates to the caller
-                # instead of being swallowed 16 times.
-                continue
-            return man["epoch"]
-    raise RuntimeError(
-        f"_acquire_state_root({state_root}): lost the epoch CAS 16 times"
-    )
-
-
-def _check_state_epoch(state_root: str, epoch: int) -> None:
-    from mapreduce_framework_spark.storage import WriterFenced
-
-    man = read_manifest_doc(os.path.join(state_root, STATE_MANIFEST))
-    cur = None if man is None else man.get("epoch")
-    if cur != epoch:
-        raise WriterFenced(
-            f"writer fenced: state root {state_root} is owned by epoch "
-            f"{cur!r} but this writer holds epoch {epoch} — another merge "
-            "sink acquired the root after this one. Nothing was committed "
-            "by this writer."
-        )
-
-
-def _commit_state_version(
-    state_root: str, batch_id: int, epoch: int | None = None
+def _publish_state(
+    spark: SparkSession, state_root: str, batch_id: int, state: DataFrame, epoch: int
 ) -> None:
-    """Publish ``state_v{batch_id}`` to the manifest (atomic JSON commit;
-    adopts a pre-manifest legacy layout on first contact) and prune
-    versions that fell out of the ``STATE_KEEP`` retention window —
-    strictly AFTER the commit, so a crash anywhere leaves either the old
-    manifest with all its dirs or the new one with harmless orphans.
-    ``epoch``: the writer's fencing token, re-checked at the commit point
-    (see _acquire_state_root); every manifest field outside the retention
-    window — including the epoch — is preserved by the rewrite."""
-    man = _read_or_adopt_state_manifest(state_root)
-    man["versions"] = sorted(set(man["versions"]) | {batch_id})[-STATE_KEEP:]
-    # the fencing token is enforced AT the commit through the backend seam
-    # (conditional PUT on object storage, last-moment re-check on POSIX)
-    commit_manifest(
-        os.path.join(state_root, STATE_MANIFEST), man, expected_epoch=epoch
+    publish_delta(spark, state_root, batch_id, state, None, epoch=epoch)
+    retain_newest_deltas(state_root, STATE_KEEP, epoch)
+
+
+def run_available_now(
+    stream: DataFrame, apply_batch, checkpoint: str, timeout_s: int, what: str
+) -> None:
+    """Drive ``stream`` through ``apply_batch`` with foreachBatch under an
+    availableNow trigger (everything available at start, then stop); a
+    stream still running after ``timeout_s`` is stopped and raises
+    TimeoutError. The one driver of every foreachBatch sink."""
+    q = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    for d in os.listdir(state_root):
-        if d.startswith("state_v") and int(d.split("state_v")[1]) not in man["versions"]:
-            shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{what} stream did not finish in {timeout_s}s")
 
 
 def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
     """Returns the foreachBatch function: fold the batch's ops per key on
     top of the previous persisted state and write the next state version.
-    Constructing the sink ACQUIRES the state root (writer fencing — see
-    _acquire_state_root)."""
+    Constructing the sink ACQUIRES the state root (writer fencing)."""
     from mapreduce_framework_spark.operators.kv import fold_ops
 
-    epoch = _acquire_state_root(state_root)
+    epoch = acquire_index_root(state_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         import pandas as pd
 
-        prev = _latest_state(spark, state_root, before_batch=batch_id)
+        prev = latest_delta(spark, state_root, before_batch=batch_id)
 
         def fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
             initial = ""
@@ -224,9 +104,7 @@ def make_kv_merge_batch_fn(spark: SparkSession, state_root: str):
         new_state = folded if prev is None else (
             prev.join(folded, "key", "left_anti").unionByName(folded)
         )
-        out = os.path.join(state_root, f"state_v{batch_id}")
-        new_state.write.mode("overwrite").parquet(out)
-        _commit_state_version(state_root, batch_id, epoch=epoch)
+        _publish_state(spark, state_root, batch_id, new_state, epoch)
 
     return apply_batch
 
@@ -240,9 +118,9 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
     continuous-aggregate maintenance loop (q65's rollup, kept incrementally
     fresh); the state table is bounded by hours × types, tiny even when the
     raw stream is 100 TB. Constructing the sink ACQUIRES the state root
-    (writer fencing — see _acquire_state_root)."""
+    (writer fencing)."""
 
-    epoch = _acquire_state_root(state_root)
+    epoch = acquire_index_root(state_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from mapreduce_framework_spark.catalog import trunc_ntz_expr
@@ -255,7 +133,7 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col("value").cast("decimal(38,6)")).alias("val"),
         )
-        prev = _latest_state(spark, state_root, before_batch=batch_id)
+        prev = latest_delta(spark, state_root, before_batch=batch_id)
         merged = (
             hourly
             if prev is None
@@ -263,9 +141,7 @@ def make_rollup_merge_batch_fn(spark: SparkSession, state_root: str):
             .groupBy("h", "event_type")
             .agg(F.sum("cnt").alias("cnt"), F.sum("val").alias("val"))
         )
-        out = os.path.join(state_root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        _commit_state_version(state_root, batch_id, epoch=epoch)
+        _publish_state(spark, state_root, batch_id, merged, epoch)
 
     return apply_batch
 
@@ -279,18 +155,11 @@ def run_rollup_merge_stream(
 ) -> DataFrame:
     """Drive the events stream through the rollup-merge sink and return the
     final persisted hourly rollup."""
-    q = (
-        events_stream.writeStream.foreachBatch(
-            make_rollup_merge_batch_fn(spark, state_root)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        events_stream, make_rollup_merge_batch_fn(spark, state_root), checkpoint,
+        timeout_s, "rollup merge",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"rollup merge stream did not finish in {timeout_s}s")
-    state = _latest_state(spark, state_root)
+    state = latest_delta(spark, state_root)
     assert state is not None, "stream produced no rollup version"
     return state
 
@@ -304,17 +173,10 @@ def run_kv_merge_stream(
 ) -> DataFrame:
     """Drive the ops stream through the foreachBatch merge sink and return
     the final persisted state."""
-    q = (
-        ops_stream.writeStream.foreachBatch(
-            make_kv_merge_batch_fn(spark, state_root)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        ops_stream, make_kv_merge_batch_fn(spark, state_root), checkpoint,
+        timeout_s, "kv merge",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"kv merge stream did not finish in {timeout_s}s")
-    state = _latest_state(spark, state_root)
+    state = latest_delta(spark, state_root)
     assert state is not None, "stream produced no state version"
     return state

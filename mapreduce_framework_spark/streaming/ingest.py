@@ -85,7 +85,6 @@ Round-8 lifecycle hardening (all measured/argued in SCALING.md):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -94,15 +93,19 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark.storage import (
     acquire_index_root,
-    check_index_epoch,
     compact_index_manifest,
-    legacy_delta_entries,
+    covered_batches,
+    delta_dir,  # noqa: F401  (re-exported: callers resolve deltas from here)
+    index_so_far,
     manifest_visible_paths,
-    new_index_manifest,
     prune_superseded_index_dirs,
+    publish_delta,
     read_index_manifest,
-    write_index_manifest,
+    require_manifest_field,
+    stamp_manifest_field,
+    update_index_manifest,
 )
+from mapreduce_framework_spark.streaming.foreach_batch import run_available_now
 
 # Fold the delta tail into the compacted artifact once it reaches this many
 # dirs: steady-state per-batch index reads touch 1 compacted dir + a tail of
@@ -111,53 +114,6 @@ from mapreduce_framework_spark.storage import (
 # listing + a 1e5-path parquet read). 64 amortizes the O(index) rewrite to
 # 1/64 of batches while keeping the tail read small.
 DEFAULT_COMPACT_EVERY = 64
-
-
-def _index_so_far(
-    spark: SparkSession, index_root: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """The index visible to a batch: every delta from batches STRICTLY
-    BEFORE it. Excluding ``delta_v{batch_id}`` itself is what makes the
-    sink idempotent under foreachBatch's crash-restart redelivery — a
-    failed attempt may have written the batch's own delta already, and
-    matching against it would self-reject every redelivered doc and then
-    overwrite the delta empty (pinned by
-    tests/test_streaming.py::test_ingest_batch_redelivery_is_idempotent).
-
-    The index is addressed through its MANIFEST (storage.py: one atomic
-    JSON commit per batch — object-storage-safe, no directory listing on
-    the read path, hard error on a gap or missing dir). A root with delta
-    dirs but no manifest is the pre-manifest legacy layout: fall back to
-    the POSIX listing once (recognizing BOTH historical delta namings —
-    storage.legacy_delta_entries); the next published batch adopts the
-    dirs into a manifest."""
-    man = read_index_manifest(index_root)
-    if man is not None:
-        paths = manifest_visible_paths(index_root, man, before_batch)
-        if not paths:
-            return None
-        return spark.read.option("recursiveFileLookup", "true").parquet(*paths)
-    if not os.path.isdir(index_root):
-        return None
-    entries = legacy_delta_entries(index_root)
-    if before_batch is not None:
-        entries = [e for e in entries if e[0] < before_batch]
-    if not entries:
-        return None
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        *[os.path.join(index_root, name) for _, name in entries]
-    )
-
-
-def _covered_batches(root: str, before_batch: int | None) -> frozenset:
-    man = read_index_manifest(root)
-    if man is None:
-        return frozenset()
-    ids = {e[0] for e in man["deltas"]}
-    ids |= set(range(0, man["compacted_through"] + 1))
-    if before_batch is not None:
-        ids = {b for b in ids if b < before_batch}
-    return frozenset(ids)
 
 
 def _check_bands_coverage(
@@ -169,37 +125,14 @@ def _check_bands_coverage(
     mid-stream (or losing one of its deltas) must therefore be a hard
     error before any match runs. Coverage = the set of batch ids each
     manifest commits (compacted range ∪ tail)."""
-    cs = _covered_batches(sig_root, before_batch)
-    cb = _covered_batches(bands_root, before_batch)
+    cs = covered_batches(sig_root, before_batch)
+    cb = covered_batches(bands_root, before_batch)
     if cs != cb:
         raise ValueError(
             f"band index at {bands_root} covers batches {sorted(cb)} but the "
             f"signature index at {sig_root} covers {sorted(cs)} — enable "
             "bands_root from the root's first batch (or backfill it with "
             "banded_signatures over the existing index) before matching"
-        )
-
-
-def _require_codebook(index_root: str, fingerprint: str) -> None:
-    """Hard-fail when a semantic index root was built under a DIFFERENT
-    codebook than the sink holds (manifest ``codebook_id`` vs the sink's
-    own fingerprint). Cell assignments are only comparable under one
-    codebook: a refreshed codebook paired with a stale index silently
-    mis-matches every batch — this check runs BEFORE the batch's first
-    publish, so no decision is ever committed under the mismatch. A
-    manifest without a stamp (pre-check legacy root, or first batch) is
-    accepted and stamped at publish time."""
-    man = read_index_manifest(index_root)
-    if man is None:
-        return
-    cid = man.get("codebook_id")
-    if cid is not None and cid != fingerprint:
-        raise ValueError(
-            f"semantic index at {index_root} was built under codebook "
-            f"{cid[:12]}... but this sink holds {fingerprint[:12]}... — "
-            "cell assignments are only comparable under ONE codebook; "
-            "after a refresh run reindex_semantic_root and hand the SAME "
-            "centroids frame to the sink"
         )
 
 
@@ -264,18 +197,17 @@ def _log_drift(
 
     if qerr is None:
         return
-    man = read_index_manifest(index_root)
-    if man is None:
-        return
-    drift = [e for e in man.get("drift", []) if e[0] != batch_id]
-    drift.append([batch_id, qerr])
-    drift.sort()
-    man["drift"] = drift[-DRIFT_WINDOW_MAX:]
-    if man.get("drift_baseline") is None and len(man["drift"]) >= DRIFT_BASELINE_K:
-        man["drift_baseline"] = statistics.median(
-            q for _, q in man["drift"][:DRIFT_BASELINE_K]
-        )
-    write_index_manifest(index_root, man, expected_epoch=epoch)
+
+    def log(man):
+        drift = [e for e in man.get("drift", []) if e[0] != batch_id]
+        man = {**man, "drift": sorted(drift + [[batch_id, qerr]])[-DRIFT_WINDOW_MAX:]}
+        if man.get("drift_baseline") is None and len(man["drift"]) >= DRIFT_BASELINE_K:
+            man["drift_baseline"] = statistics.median(
+                q for _, q in man["drift"][:DRIFT_BASELINE_K]
+            )
+        return man
+
+    update_index_manifest(index_root, log, epoch)
 
 
 def drift_stats(index_root: str, window: int = 8) -> dict | None:
@@ -351,16 +283,10 @@ def refresh_semantic_root_if_needed(
 
     if not needs_refit(index_root, threshold=threshold, window=window):
         return None
-    man = read_index_manifest(index_root)
-    paths = manifest_visible_paths(index_root, man)
-    if not paths:
+    idx = index_so_far(spark, index_root)
+    if idx is None:
         return None
-    embs = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .select("vec_id", "embedding")
-        .dropDuplicates(["vec_id"])
-    )
+    embs = idx.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     refreshed = refit_codebook(
         embs,
         centroids,
@@ -369,65 +295,6 @@ def refresh_semantic_root_if_needed(
     ).localCheckpoint(eager=True)
     reindex_semantic_root(spark, index_root, refreshed, next_batch)
     return refreshed
-
-
-def _require_phash_config(index_root: str, fingerprint: str) -> None:
-    """Hard-fail when a phash index root was built under a DIFFERENT
-    (cells, bands, threshold) configuration than the sink holds
-    (manifest ``phash_config`` vs multimodal_dedup.phash_fingerprint()).
-    Hashes are only comparable under one grid: a 32-cell index probed by
-    a 64-cell sink (the SCALING.md round-12 width guidance) silently
-    matches NOTHING — every re-encoded copy admits. Runs UNCONDITIONALLY
-    at the top of apply_batch whenever the sink holds a phash root
-    (exactly _require_codebook's placement), not just once the index
-    becomes visible: a sink restarted at batch 0 over an existing
-    never-compacted root sees no loaded index, and a load-gated check
-    would let it publish a new-width delta into the old-width root
-    before any probe ever runs (round-12 ADVICE). An unstamped manifest
-    (legacy root or first batches) is accepted and stamped at publish
-    time — _require_codebook's contract."""
-    man = read_index_manifest(index_root)
-    if man is None:
-        return
-    cfg = man.get("phash_config")
-    if cfg is not None and cfg != fingerprint:
-        raise ValueError(
-            f"phash index at {index_root} was built under config {cfg} but "
-            f"this sink computes {fingerprint} — perceptual hashes are only "
-            "comparable under ONE (cells, bands, threshold) configuration; "
-            "rebuild the index (phash_index over the corpus) at the new "
-            "width, or run the sink at the index's width"
-        )
-
-
-def _stamp_phash_config(
-    index_root: str, fingerprint: str, epoch: int | None = None
-) -> None:
-    """Record the sink's phash config in the index manifest if ABSENT
-    (first publish, or a pre-check legacy root) — same stamp-if-absent
-    contract and crash/fencing story as _stamp_codebook below. Never
-    overwrites a differing stamp: a mismatch is _require_phash_config's
-    hard failure (which runs unconditionally at the top of apply_batch),
-    and overwriting here would let a batch-0 restart under a different
-    grid clobber the old stamp and silently legitimize a mixed-width
-    index (round-12 ADVICE)."""
-    man = read_index_manifest(index_root)
-    if man is not None and man.get("phash_config") is None:
-        man["phash_config"] = fingerprint
-        write_index_manifest(index_root, man, expected_epoch=epoch)
-
-
-def _stamp_codebook(index_root: str, fingerprint: str, epoch: int | None = None) -> None:
-    """Record the sink's codebook fingerprint in the index manifest if
-    absent (first publish, or a pre-check legacy root). Crash between the
-    delta publish and this stamp just redelivers: the check accepts the
-    unstamped manifest and the stamp is rewritten. ``epoch``: fencing
-    token — a writer fenced between its last publish and this stamp must
-    not clobber the new owner's manifest with its stale snapshot."""
-    man = read_index_manifest(index_root)
-    if man is not None and man.get("codebook_id") != fingerprint:
-        man["codebook_id"] = fingerprint
-        write_index_manifest(index_root, man, expected_epoch=epoch)
 
 
 def reindex_semantic_root(
@@ -450,7 +317,7 @@ def reindex_semantic_root(
     a manifest already committing ``next_batch`` or later is a hard
     error, because the in-flight batch would have matched under the old
     codebook. The caller hands the SAME centroids frame to the next
-    sink; ``_require_codebook`` enforces the pairing from then on.
+    sink; its pre-batch codebook check enforces the pairing from then on.
     Cost: one O(index) rewrite per refresh — the same amortized shape as
     compaction, paid only when the codebook actually drifts (SCALING.md
     ANN-drift series quantifies when that is worth it)."""
@@ -471,45 +338,29 @@ def reindex_semantic_root(
             f"already commits batch {latest} — the reindex must run between "
             "batches, after the last commit and before the next delivery"
         )
-    fp = codebook_fingerprint(centroids)
-    paths = manifest_visible_paths(index_root, man)
-    out = dict(man)
-    if paths:
-        embs = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(*paths)
-            .select("vec_id", "embedding")
-            .dropDuplicates(["vec_id"])
-        )
-        # A second refresh with the same next_batch (double refresh, or a
-        # retry after a COMPLETED run) would make dst equal the manifest's
-        # current compacted_path — Spark would read from and overwrite the
-        # same directory (error, or corruption on stores without that
-        # guard). Pick a generation-unique name instead: the manifest
-        # records dir names verbatim, and compact_v* stays prunable.
-        referenced = {man.get("compacted_path")} | {n for _, n in man["deltas"]}
-        dst = f"compact_v{next_batch}"
-        gen = 0
-        while dst in referenced:
-            gen += 1
-            dst = f"compact_v{next_batch}_{gen}"
-        semantic_index(embs, centroids).coalesce(target_files).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_root, dst))
-        out["compacted_path"] = dst
-        out["compacted_through"] = next_batch - 1
-        out["deltas"] = []
-    out["codebook_id"] = fp
+    out = compact_index_manifest(
+        spark, index_root, man, below_batch=next_batch, target_files=target_files,
+        transform=lambda folded: semantic_index(
+            folded.select("vec_id", "embedding").dropDuplicates(["vec_id"]),
+            centroids,
+        ),
+    )
     # the drift log is only meaningful under ONE codebook: the swap resets
     # it and stamps the FIT-TIME quantization error of the reindexed
     # corpus under the new book as the baseline (one extra aggregate over
-    # vectors this rewrite already reads — the unbiased anchor the
-    # round-9 ADVICE asked for, immune to an unrepresentative first
-    # post-swap batch)
-    out.pop("drift", None)
-    out.pop("drift_baseline", None)
-    if paths:
-        fit_err = _batch_quantization_error(embs, centroids)
+    # the rows this rewrite just wrote — the unbiased anchor the round-9
+    # ADVICE asked for, immune to an unrepresentative first post-swap
+    # batch)
+    out = {k: v for k, v in out.items() if k not in ("drift", "drift_baseline")}
+    out["codebook_id"] = codebook_fingerprint(centroids)
+    if out["compacted_path"] != man["compacted_path"]:  # anything was folded
+        (fit_dir,) = manifest_visible_paths(index_root, out)
+        fit_err = _batch_quantization_error(
+            spark.read.parquet(fit_dir)
+            .select("vec_id", "embedding")
+            .dropDuplicates(["vec_id"]),
+            centroids,
+        )
         if fit_err is not None:
             out["drift_baseline"] = fit_err
     # the swap FENCES any still-running sink (epoch bump): a zombie batch
@@ -517,81 +368,14 @@ def reindex_semantic_root(
     # commit rows assigned under the OLD codebook into the swapped index —
     # the one window the per-batch fingerprint guard cannot close. The
     # next sink acquires the root afresh (with the new centroids) as the
-    # lifecycle prescribes. The bump commits CONDITIONALLY on the epoch
-    # this reindex read (commit seam), so two concurrent reindexes cannot
-    # both claim the same successor epoch.
-    out["epoch"] = int(man.get("epoch", 0)) + 1
-    write_index_manifest(index_root, out, expected_epoch=int(man.get("epoch", 0)))
+    # lifecycle prescribes. The swap replaces the manifest wholesale,
+    # committed CONDITIONALLY on the epoch this reindex read (commit
+    # seam), so two concurrent reindexes cannot both claim the same
+    # successor epoch.
+    prev = int(man.get("epoch", 0))
+    out["epoch"] = prev + 1
+    update_index_manifest(index_root, lambda _: out, epoch=prev)
     prune_superseded_index_dirs(index_root, out)
-
-
-def _publish_delta(
-    spark: SparkSession,
-    index_root: str,
-    batch_id: int,
-    delta_df: DataFrame,
-    compact_every: int | None,
-    epoch: int | None = None,
-    compact_transform=None,
-) -> None:
-    """Write one batch's delta (admitted-docs index rows, or the batch's
-    decision rows — both logs share this lifecycle) and commit it to the
-    manifest (the single atomic step), compacting the tail first when it
-    reaches ``compact_every`` dirs. Compaction folds only deltas STRICTLY BELOW
-    ``batch_id`` — the in-flight batch's own delta stays an unfolded tail
-    entry, so a crash-restart redelivery of ``batch_id`` still sees
-    exactly the strictly-before index (pinned by
-    tests/test_streaming.py::test_ingest_redelivery_after_compaction).
-    Superseded dirs are pruned only AFTER the manifest commit: a crash at
-    any point leaves either the old manifest with all its dirs intact or
-    the new manifest with (at worst) unreferenced orphans.
-
-    ``epoch``: the writer's fencing token (storage.acquire_index_root —
-    every streaming sink acquires its roots at construction). Checked
-    before the delta write AND enforced at the manifest commit itself
-    (storage.commit_manifest), so a fenced writer (another stream took
-    the root, or this is a zombie retry of a replaced driver) hard-errors
-    without committing anything — never silent last-writer-wins. None =
-    unfenced (library/batch callers that own their root by construction).
-
-    Fenced writers write their delta under an EPOCH-SUFFIXED dir name
-    (``delta_v{batch}_e{epoch}`` — round-9 ADVICE): the pre-commit epoch
-    check cannot protect the delta write that precedes it, so a zombie
-    redelivering a batch id the new owner already committed would
-    otherwise delete/replace parquet files inside a dir the COMMITTED
-    manifest references — corrupting visible data for the whole duration
-    of the write. With the epoch in the name, a fenced writer can only
-    ever touch dirs no committed manifest references (the manifest
-    records names verbatim, so readers are oblivious); the zombie's
-    orphan dir is swept by the next compaction's prune. Resolve a
-    batch's dir through :func:`delta_dir`, never by assembling the name."""
-    if epoch is not None:
-        check_index_epoch(index_root, epoch)
-    name = f"delta_v{batch_id}" if epoch is None else f"delta_v{batch_id}_e{epoch}"
-    delta_df.write.mode("overwrite").parquet(os.path.join(index_root, name))
-    man = read_index_manifest(index_root)
-    if man is None:
-        man = new_index_manifest()
-        # adopt a pre-manifest legacy layout so its deltas stay visible —
-        # including pre-round-7 d_v* decision deltas (the manifest records
-        # dir names verbatim, so no rename is needed and the historical
-        # decisions remain addressable forever)
-        man["deltas"] = legacy_delta_entries(index_root, exclude=(name,))
-    man["deltas"] = sorted(
-        [e for e in man["deltas"] if e[0] != batch_id] + [[batch_id, name]]
-    )
-    tail_before = [e for e in man["deltas"] if e[0] < batch_id]
-    if compact_every is not None and len(tail_before) >= compact_every:
-        man = compact_index_manifest(
-            spark, index_root, man, below_batch=batch_id,
-            transform=compact_transform,
-        )
-    # the fencing token is enforced AT the commit through the manifest
-    # backend seam (storage.commit_manifest): conditional PUT on object
-    # storage, last-moment re-check on POSIX — epoch=None commits
-    # unconditionally (library/batch callers that own their root)
-    write_index_manifest(index_root, man, expected_epoch=epoch)
-    prune_superseded_index_dirs(index_root, man)
 
 
 def _run_publish_chains(*chains) -> None:
@@ -604,7 +388,7 @@ def _run_publish_chains(*chains) -> None:
     index root. Cross-root publish ORDER was never a correctness edge: a
     crash between any subset of a batch's publishes just redelivers the
     batch, and every manifest re-commit replaces rather than duplicates
-    (the _publish_delta contract). Orderings that DO carry an invariant
+    (the storage.publish_delta contract). Orderings that DO carry an invariant
     stay inside one chain: delta → config stamp → drift log share a
     root's manifest (never written from two threads), and signatures →
     bands preserves _check_bands_coverage's bands ⊆ sigs coverage rule.
@@ -622,28 +406,6 @@ def _run_publish_chains(*chains) -> None:
     for ex in [f.exception() for f in futures]:
         if ex is not None:
             raise ex
-
-
-def delta_dir(index_root: str, batch_id: int) -> str:
-    """The on-disk directory of one batch's (unfolded) delta, resolved
-    through the manifest — the ONLY correct way to address a delta, since
-    fenced writers epoch-suffix their dir names (_publish_delta) and the
-    manifest records whatever name the committing writer used."""
-    man = read_index_manifest(index_root)
-    entries = (
-        man["deltas"] if man is not None else legacy_delta_entries(index_root)
-    )
-    for b, name in entries:
-        if b == batch_id:
-            return os.path.join(index_root, name)
-    raise ValueError(
-        f"batch {batch_id} has no unfolded delta under {index_root}"
-        + (
-            f" (compacted through {man['compacted_through']})"
-            if man is not None
-            else ""
-        )
-    )
 
 
 def _intra_batch_exact_best(docs: DataFrame) -> DataFrame:
@@ -772,7 +534,7 @@ def _admission_core(
         phash_cells, phash_bands = phash_params(phash_cells, phash_bands)
 
     def publish(root, epoch, batch_id, df, transform=None):
-        _publish_delta(
+        publish_delta(
             spark, root, batch_id, df, compact_every, epoch=epoch,
             compact_transform=transform,
         )
@@ -808,7 +570,7 @@ def _admission_core(
         ep_fp = acquire_index_root(fp_index_root)
 
         def _exact(batch_id, live):
-            idx = _index_so_far(spark, fp_index_root, before_batch=batch_id)
+            idx = index_so_far(spark, fp_index_root, before_batch=batch_id)
             if idx is None:
                 return None
             return (
@@ -843,7 +605,7 @@ def _admission_core(
         ep_ph = acquire_index_root(phash_index_root)
 
         def _media(batch_id, live):
-            idx = _index_so_far(spark, phash_index_root, before_batch=batch_id)
+            idx = index_so_far(spark, phash_index_root, before_batch=batch_id)
             if idx is None:
                 return None
             return phash_match_batch(
@@ -861,15 +623,20 @@ def _admission_core(
 
             def chain():
                 publish(phash_index_root, ep_ph, batch_id, delta)
-                _stamp_phash_config(phash_index_root, ph_fp, epoch=ep_ph)
+                stamp_manifest_field(phash_index_root, "phash_config", ph_fp, ep_ph)
 
             return chain
 
+        # hashes are only comparable under one grid: a 32-cell index probed
+        # by a 64-cell sink silently matches NOTHING (round-12 ADVICE)
         tiers.append(_Tier(
             "media_dup", "ph_id", "ph_sim", _media, _ph_chain,
-            # unconditional, like the codebook check: a batch-0 restart over
-            # an existing root must fail on a width mismatch before publishing
-            lambda: _require_phash_config(phash_index_root, ph_fp),
+            lambda: require_manifest_field(
+                phash_index_root, "phash_config", ph_fp, "phash index",
+                "perceptual hashes are only comparable under ONE (cells, bands, "
+                "threshold) configuration; rebuild the index (phash_index over "
+                "the corpus) at the new width, or run the sink at the index's width",
+            ),
         ))
 
     if sig_index_root is not None:
@@ -887,7 +654,7 @@ def _admission_core(
         bands_cap = None if band_cap is None else (lambda df: cap_banded(df, band_cap))
 
         def _near(batch_id, live):
-            idx = _index_so_far(spark, sig_index_root, before_batch=batch_id)
+            idx = index_so_far(spark, sig_index_root, before_batch=batch_id)
             if idx is None:
                 return None
             bands = None
@@ -895,7 +662,7 @@ def _admission_core(
                 _check_bands_coverage(
                     sig_index_root, sig_bands_root, before_batch=batch_id
                 )
-                bands = _index_so_far(spark, sig_bands_root, before_batch=batch_id)
+                bands = index_so_far(spark, sig_bands_root, before_batch=batch_id)
             matches = match_batch(idx, live, threshold, shingler, index_bands=bands)
             return best_of(matches, "id2", "jaccard", "id1", "nd_id", "nd_jaccard")
 
@@ -943,7 +710,7 @@ def _admission_core(
             )
 
         def _semantic(batch_id, live):
-            idx = _index_so_far(spark, sem_index_root, before_batch=batch_id)
+            idx = index_so_far(spark, sem_index_root, before_batch=batch_id)
             if idx is None:
                 return None
             matches = semantic_match_batch(idx, vectors(live), centroids, cos_t)
@@ -955,7 +722,7 @@ def _admission_core(
                     sem_index_root, ep_sem, batch_id,
                     semantic_index(vectors(admitted), centroids), cells_cap,
                 )
-                _stamp_codebook(sem_index_root, cb_fp, epoch=ep_sem)
+                stamp_manifest_field(sem_index_root, "codebook_id", cb_fp, ep_sem)
                 # drift trigger: the WHOLE batch's quantization error under the
                 # held codebook (rejects carry drift signal too)
                 qerr = _batch_quantization_error(vectors(batch), centroids)
@@ -963,9 +730,16 @@ def _admission_core(
 
             return chain
 
+        # cell assignments are only comparable under one codebook: a refreshed
+        # codebook paired with a stale index silently mis-matches every batch
         tiers.append(_Tier(
             "semantic", "sm_id", "sm_cos", _semantic, _sem_chain,
-            lambda: _require_codebook(sem_index_root, cb_fp),
+            lambda: require_manifest_field(
+                sem_index_root, "codebook_id", cb_fp, "semantic index",
+                "cell assignments are only comparable under ONE codebook; after "
+                "a refresh run reindex_semantic_root and hand the SAME centroids "
+                "frame to the sink",
+            ),
         ))
 
     if benchmark_span_index is not None:
@@ -1036,16 +810,8 @@ def _run_ingest_stream(
     """Drive ``stream`` through one sink front with foreachBatch under an
     availableNow trigger and return the decisions log read back from
     ``decisions_root`` (the union of every batch's decisions)."""
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"{what} stream did not finish in {timeout_s}s")
-    decisions = _index_so_far(spark, decisions_root)
+    run_available_now(stream, apply_batch, checkpoint, timeout_s, what)
+    decisions = index_so_far(spark, decisions_root)
     if decisions is None:
         raise ValueError(
             f"stream processed no batches — no decisions under {decisions_root}"
@@ -1478,7 +1244,7 @@ def admission_report(spark: SparkSession, decisions_root: str) -> DataFrame:
     """:func:`admission_report_frame` over a manifest-addressed decisions
     root (compacted + bounded-tail read, the same path every sink's
     decisions log is read back through)."""
-    dec = _index_so_far(spark, decisions_root)
+    dec = index_so_far(spark, decisions_root)
     if dec is None:
         raise ValueError(f"no decisions committed under {decisions_root}")
     return admission_report_frame(dec)

@@ -452,10 +452,8 @@ def test_band_cap_reapplied_at_compaction(spark, tmp_path):
     candidate join's key population stays <= cap + tail contribution."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.storage import read_index_manifest
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
     docs = _boilerplate_cluster(spark, n_cluster=300, n_normal=10)
     # batch 0 admits its whole cluster slice in one delta (within-batch
@@ -486,7 +484,7 @@ def test_band_cap_reapplied_at_compaction(spark, tmp_path):
     )
     top = compacted.groupBy("band", "bsig").count().agg(F.max("count")).collect()[0][0]
     assert top <= 16
-    full = _index_so_far(spark, bands_root)
+    full = index_so_far(spark, bands_root)
     tail_batches = len(man["deltas"])
     top_full = full.groupBy("band", "bsig").count().agg(F.max("count")).collect()[0][0]
     # bounded by cap + what the bounded tail can add (each tail delta is

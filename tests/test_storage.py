@@ -145,19 +145,18 @@ def test_concurrent_acquisition_yields_distinct_epochs(tmp_path):
 
 
 def test_state_acquisition_propagates_non_fencing_backend_errors(tmp_path):
-    """Round-10 ADVICE: _acquire_state_root's CAS retry must catch exactly
-    the fencing outcomes (WriterFenced / ManifestPreconditionFailed) — a
-    custom backend's UNRELATED ValueError must propagate on first raise
-    instead of being swallowed 16 times and resurfacing as the opaque
-    'lost the epoch CAS 16 times' RuntimeError."""
+    """Round-10 ADVICE: acquisition's CAS retry (acquire_index_root, which
+    also acquires the merge sinks' state roots) must catch exactly the
+    fencing outcome (ManifestPreconditionFailed) — a custom backend's
+    UNRELATED ValueError must propagate on first raise instead of being
+    swallowed 16 times and resurfacing as the opaque 'lost the epoch CAS
+    16 times' RuntimeError."""
     import pytest as _pytest
 
     from mapreduce_framework_spark.storage import (
         PosixManifestBackend,
+        acquire_index_root,
         set_manifest_backend,
-    )
-    from mapreduce_framework_spark.streaming.foreach_batch import (
-        _acquire_state_root,
     )
 
     class BrokenBackend(PosixManifestBackend):
@@ -174,24 +173,21 @@ def test_state_acquisition_propagates_non_fencing_backend_errors(tmp_path):
     prev = set_manifest_backend(backend)
     try:
         with _pytest.raises(ValueError, match="quota exceeded"):
-            _acquire_state_root(str(tmp_path / "state"))
+            acquire_index_root(str(tmp_path / "state"))
         assert backend.calls == 1  # first raise, no retry loop
     finally:
         set_manifest_backend(prev)
 
 
 def test_state_acquisition_retries_fenced_commits(tmp_path):
-    """The converse: genuine CAS losses (WriterFenced from
-    commit_manifest's mapping, or a backend's raw
+    """The converse: genuine CAS losses (the backend's
     ManifestPreconditionFailed) DO retry and succeed once the race
     clears."""
     from mapreduce_framework_spark.storage import (
         ManifestPreconditionFailed,
         PosixManifestBackend,
+        acquire_index_root,
         set_manifest_backend,
-    )
-    from mapreduce_framework_spark.streaming.foreach_batch import (
-        _acquire_state_root,
     )
 
     class FlakyBackend(PosixManifestBackend):
@@ -210,7 +206,7 @@ def test_state_acquisition_retries_fenced_commits(tmp_path):
     backend = FlakyBackend()
     prev = set_manifest_backend(backend)
     try:
-        epoch = _acquire_state_root(str(tmp_path / "state"))
+        epoch = acquire_index_root(str(tmp_path / "state"))
         assert epoch == 1
         assert backend.calls == 4  # 3 losses + the winning commit
     finally:

@@ -746,11 +746,12 @@ def test_ingest_batch_redelivery_is_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
-    """Crash-restart redelivery (same batch_id, state_v{id} already on
-    disk) must leave both foreachBatch merge sinks unchanged: the KV fold
-    must not re-append the batch's ops onto its own output, and the
-    rollup must not double-count the batch."""
+    """Crash-restart redelivery (same batch_id, the batch's state snapshot
+    already committed) must leave both foreachBatch merge sinks unchanged:
+    the KV fold must not re-append the batch's ops onto its own output,
+    and the rollup must not double-count the batch."""
     from mapreduce_framework_spark.catalog import table
+    from mapreduce_framework_spark.storage import delta_dir
     from mapreduce_framework_spark.streaming.foreach_batch import (
         make_kv_merge_batch_fn,
         make_rollup_merge_batch_fn,
@@ -768,12 +769,12 @@ def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
     kv_fn(b1, 1)
     once = {
         (r["key"], r["value"])
-        for r in spark.read.parquet(kv_root + "/state_v1").collect()
+        for r in spark.read.parquet(delta_dir(kv_root, 1)).collect()
     }
     kv_fn(b1, 1)  # redelivery
     twice = {
         (r["key"], r["value"])
-        for r in spark.read.parquet(kv_root + "/state_v1").collect()
+        for r in spark.read.parquet(delta_dir(kv_root, 1)).collect()
     }
     assert twice == once, "KV merge re-applied the redelivered batch"
 
@@ -787,12 +788,12 @@ def test_merge_sinks_redelivery_idempotent(spark, sf_dir, tmp_path):
     ru_fn(eb1, 1)
     once = {
         (r["h"], r["event_type"], r["cnt"], str(r["val"]))
-        for r in spark.read.parquet(ru_root + "/state_v1").collect()
+        for r in spark.read.parquet(delta_dir(ru_root, 1)).collect()
     }
     ru_fn(eb1, 1)  # redelivery
     twice = {
         (r["h"], r["event_type"], r["cnt"], str(r["val"]))
-        for r in spark.read.parquet(ru_root + "/state_v1").collect()
+        for r in spark.read.parquet(delta_dir(ru_root, 1)).collect()
     }
     assert twice == once, "rollup merge double-counted the redelivered batch"
 
@@ -1233,10 +1234,10 @@ def test_ingest_compaction_preserves_decisions(spark, sf_dir, tmp_path):
         name for _, name in man["deltas"]
     }
     # the manifest-addressed index equals the plain root's full content
-    from mapreduce_framework_spark.streaming.ingest import _index_so_far
+    from mapreduce_framework_spark.storage import index_so_far
 
-    a = _index_so_far(spark, str(tmp_path / "compact" / "index"))
-    b = _index_so_far(spark, str(tmp_path / "plain" / "index"))
+    a = index_so_far(spark, str(tmp_path / "compact" / "index"))
+    b = index_so_far(spark, str(tmp_path / "plain" / "index"))
     assert {r["doc_id"] for r in a.select("doc_id").collect()} == {
         r["doc_id"] for r in b.select("doc_id").collect()
     }
@@ -1295,7 +1296,7 @@ def test_manifest_gap_or_missing_dir_is_hard_error(spark, tmp_path):
         new_index_manifest,
         write_index_manifest,
     )
-    from mapreduce_framework_spark.streaming.ingest import _index_so_far
+    from mapreduce_framework_spark.storage import index_so_far
 
     root = str(tmp_path / "index")
     one = spark.range(1).select(F.col("id").alias("doc_id"))
@@ -1306,12 +1307,12 @@ def test_manifest_gap_or_missing_dir_is_hard_error(spark, tmp_path):
     man["deltas"] = [[0, "delta_v0"], [2, "delta_v2"]]  # batch 1 missing
     write_index_manifest(root, man)
     with _pytest.raises(ValueError, match="gap"):
-        _index_so_far(spark, root)
+        index_so_far(spark, root)
 
     man["deltas"] = [[0, "delta_v0"], [1, "delta_v1"]]  # dir not on disk
     write_index_manifest(root, man)
     with _pytest.raises(ValueError, match="missing"):
-        _index_so_far(spark, root)
+        index_so_far(spark, root)
 
     # compacted boundary at-or-above an in-flight batch id = corruption
     man["deltas"] = [[4, "delta_v0"]]
@@ -1319,7 +1320,7 @@ def test_manifest_gap_or_missing_dir_is_hard_error(spark, tmp_path):
     man["compacted_through"] = 3
     write_index_manifest(root, man)
     with _pytest.raises(ValueError, match="strictly below"):
-        _index_so_far(spark, root, before_batch=2)
+        index_so_far(spark, root, before_batch=2)
 
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays
@@ -1371,20 +1372,18 @@ def test_semantic_ingest_compaction_preserves_decisions(spark, tmp_path):
 
 
 def test_merge_sink_state_retention_and_manifest(spark, sf_dir, tmp_path):
-    """Round-7 state-manifest discipline on the merge sinks: N batches
-    leave exactly STATE_KEEP state dirs + the manifest (retention — the
-    strictly-before rule only ever needs the version just below the
-    in-flight batch), the final state still equals the all-at-once batch
-    aggregate, and a state root whose retained versions sit entirely at
-    or above the in-flight batch is a HARD error (mismatched checkpoint/
-    state roots), never a silent state re-initialization."""
+    """The merge sinks' state root is a manifest root with retention: N
+    batches leave exactly STATE_KEEP snapshot dirs, each referenced by the
+    manifest (the strictly-before rule only ever needs the snapshot just
+    below the in-flight batch), the final state still equals the
+    all-at-once batch aggregate, and a root whose retained snapshots sit
+    entirely at or above the in-flight batch is a HARD error (mismatched
+    checkpoint/state roots), never a silent state re-initialization."""
     from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.storage import read_json_atomic
+    from mapreduce_framework_spark.storage import latest_delta, read_index_manifest
     from mapreduce_framework_spark.streaming.foreach_batch import (
         STATE_KEEP,
-        STATE_MANIFEST,
         make_rollup_merge_batch_fn,
-        _latest_state,
     )
     from mapreduce_framework_spark.operators.streaming_replay import (
         _hourly_rollup_batch_form,
@@ -1396,15 +1395,15 @@ def test_merge_sink_state_retention_and_manifest(spark, sf_dir, tmp_path):
     for i in range(6):
         fn(ev.where(F.col("event_id") % 6 == i), i)
 
-    man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["versions"] == [4, 5]
-    dirs = sorted(d for d in os.listdir(root) if d.startswith("state_v"))
-    assert dirs == [f"state_v{v}" for v in man["versions"]]
+    man = read_index_manifest(root)
+    assert [b for b, _ in man["deltas"]] == [4, 5]
+    dirs = sorted(d for d in os.listdir(root) if not d.startswith("_"))
+    assert dirs == sorted(name for _, name in man["deltas"])
     assert len(dirs) == STATE_KEEP
 
     final = {
         (r["h"], r["event_type"]): (r["cnt"], float(r["val"]))
-        for r in _latest_state(spark, root).collect()
+        for r in latest_delta(spark, root).collect()
     }
     want = {
         (r["h"], r["event_type"]): (r["cnt"], float(r["val"]))
@@ -1414,11 +1413,11 @@ def test_merge_sink_state_retention_and_manifest(spark, sf_dir, tmp_path):
 
     # redelivery of the LAST batch still works after retention (reads v4)
     fn(ev.where(F.col("event_id") % 6 == 5), 5)
-    assert man == read_json_atomic(os.path.join(root, STATE_MANIFEST))
+    assert man == read_index_manifest(root)
 
     # mismatched streams: in-flight batch below the whole retained window
     with pytest.raises(ValueError, match="different streams"):
-        _latest_state(spark, root, before_batch=2)
+        latest_delta(spark, root, before_batch=2)
 
 
 # --- tiered cascade admission (round 7) --------------------------------------
@@ -2339,8 +2338,8 @@ def test_semantic_reindex_swaps_codebook(spark, tmp_path):
         semantic_match_batch,
     )
     from mapreduce_framework_spark.storage import read_index_manifest
+    from mapreduce_framework_spark.storage import index_so_far
     from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
         make_semantic_ingest_batch_fn,
         reindex_semantic_root,
     )
@@ -2375,7 +2374,7 @@ def test_semantic_reindex_swaps_codebook(spark, tmp_path):
         (r["vec_id"], r["cent_id"])
         for r in semantic_index(admitted, cents_b).collect()
     }
-    got_idx_df = _index_so_far(spark, idx_root)
+    got_idx_df = index_so_far(spark, idx_root)
     got_idx = {(r["vec_id"], r["cent_id"]) for r in got_idx_df.collect()}
     assert got_idx == want_idx
     assert got_idx_df.count() == len(admitted_ids) * SEM_PROBES
@@ -2769,10 +2768,8 @@ def test_legacy_d_v_decisions_root_is_adopted(spark, sf_dir, tmp_path):
     hard-errored with 'manifest has a gap' and lost all history)."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.storage import read_index_manifest
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
     batches = _split_docs(spark, sf_dir, 3)
     idx = str(tmp_path / "index")
@@ -2816,8 +2813,8 @@ def test_legacy_d_v_decisions_root_is_adopted(spark, sf_dir, tmp_path):
     assert {
         (d, r["admitted"], r["matched_id"], r["jaccard"]) for d, r in all_dec.items()
     } == {(d, r["admitted"], r["matched_id"], r["jaccard"]) for d, r in ref.items()}
-    # _index_so_far reads the adopted layout without a gap error
-    assert _index_so_far(spark, idx).count() > 0
+    # index_so_far reads the adopted layout without a gap error
+    assert index_so_far(spark, idx).count() > 0
 
 
 def test_reindex_twice_with_same_next_batch(spark, tmp_path):
@@ -2828,8 +2825,8 @@ def test_reindex_twice_with_same_next_batch(spark, tmp_path):
     final codebook (round-8 advice item)."""
     from mapreduce_framework_spark.pipeline.semantic_dedup import semantic_index
     from mapreduce_framework_spark.storage import read_index_manifest
+    from mapreduce_framework_spark.storage import index_so_far
     from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
         make_semantic_ingest_batch_fn,
         reindex_semantic_root,
     )
@@ -2867,7 +2864,7 @@ def test_reindex_twice_with_same_next_batch(spark, tmp_path):
         for r in semantic_index(admitted, cents_b).collect()
     }
     got = {
-        (r["vec_id"], r["cent_id"]) for r in _index_so_far(spark, idx_root).collect()
+        (r["vec_id"], r["cent_id"]) for r in index_so_far(spark, idx_root).collect()
     }
     assert got == want
 
@@ -3146,12 +3143,13 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
     """The merge sinks' read-merge-write cycle gets the same fencing as
     the ingest indexes: a second sink on the same state root fences the
     first (hard error, nothing committed) and the epoch survives the
-    manifest's retention rewrite."""
+    retention rewrite."""
     from mapreduce_framework_spark.catalog import table
-    from mapreduce_framework_spark.storage import read_json_atomic
+    from mapreduce_framework_spark.storage import (
+        acquire_index_root,
+        read_index_manifest,
+    )
     from mapreduce_framework_spark.streaming.foreach_batch import (
-        STATE_MANIFEST,
-        _acquire_state_root,
         make_rollup_merge_batch_fn,
     )
 
@@ -3161,18 +3159,160 @@ def test_merge_sink_writer_fencing(spark, sf_dir, tmp_path):
 
     fn_a = make_rollup_merge_batch_fn(spark, root)
     fn_a(batches[0], 0)
-    man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["epoch"] == 1 and man["versions"] == [0]
+    man = read_index_manifest(root)
+    assert man["epoch"] == 1 and [b for b, _ in man["deltas"]] == [0]
 
     fn_b = make_rollup_merge_batch_fn(spark, root)  # takeover
     fn_b(batches[1], 1)
     with pytest.raises(ValueError, match="fenced"):
         fn_a(batches[1], 2)
-    man = read_json_atomic(os.path.join(root, STATE_MANIFEST))
-    assert man["epoch"] == 2 and man["versions"] == [0, 1]  # batch 2 never committed
+    man = read_index_manifest(root)
+    # batch 2 never committed
+    assert man["epoch"] == 2 and [b for b, _ in man["deltas"]] == [0, 1]
 
     with pytest.raises(ValueError, match="already owned"):
-        _acquire_state_root(root, takeover=False)
+        acquire_index_root(root, takeover=False)
+
+
+_KV_SCHEMA = "ts timestamp_ntz, event_id long, key string, op string, value string"
+_EV_SCHEMA = "ts timestamp_ntz, event_type string, value double"
+
+
+def _rollup_rows(df):
+    return {(r["event_type"], r["cnt"], float(r["val"])) for r in df.collect()}
+
+
+def _kv_rows(df):
+    return {(r["key"], r["value"]) for r in df.collect()}
+
+
+def test_fenced_merge_sinks_cannot_overwrite_committed_state(spark, tmp_path):
+    """A fenced merge sink (a zombie retry of a replaced driver) that
+    redelivers a batch the new owner already committed — with DIFFERENT
+    input — must raise WriterFenced and leave the owner's committed state
+    reading back exactly as the owner wrote it. A fencing check at the
+    commit alone cannot: the snapshot write precedes the commit, so a
+    zombie writing under the owner's dir name replaces the committed
+    state before its commit fails. The committed state is read the way
+    every consumer reads it: the merge driver over an empty source
+    commits nothing and returns the newest committed state."""
+    from datetime import datetime
+
+    from mapreduce_framework_spark.storage import WriterFenced
+    from mapreduce_framework_spark.streaming.foreach_batch import (
+        make_kv_merge_batch_fn,
+        make_rollup_merge_batch_fn,
+        run_kv_merge_stream,
+        run_rollup_merge_stream,
+    )
+
+    t = datetime(2024, 1, 1, 10, 5)
+    cases = {
+        "kv": (
+            make_kv_merge_batch_fn, run_kv_merge_stream, _KV_SCHEMA, _kv_rows,
+            [(t, 1, "a", "put", "x"), (t, 2, "b", "put", "5")],
+            [(t, 3, "a", "append", "y")],
+            [(t, 4, "zombie", "put", "7")],
+            {("a", "xy"), ("b", "5")},
+        ),
+        "rollup": (
+            make_rollup_merge_batch_fn, run_rollup_merge_stream, _EV_SCHEMA,
+            _rollup_rows,
+            [(t, "a", 4.0), (t, "b", 5.0)],
+            [(t, "a", 6.0)],
+            [(t, "zombie", 7.0)],
+            {("a", 2, 10.0), ("b", 1, 5.0)},
+        ),
+    }
+    for name, (make, run, schema, rows, b0, b1, other, want) in cases.items():
+        root = str(tmp_path / f"{name}_state")
+        zombie = make(spark, root)  # epoch 1
+        zombie(spark.createDataFrame(b0, schema), 0)
+        owner = make(spark, root)  # takeover: epoch 2 fences the zombie
+        owner(spark.createDataFrame(b1, schema), 1)
+
+        with pytest.raises(WriterFenced):
+            zombie(spark.createDataFrame(other, schema), 1)
+
+        empty = tmp_path / f"{name}_empty"
+        empty.mkdir()
+        state = run(
+            spark.readStream.schema(schema).parquet(str(empty)),
+            spark,
+            root,
+            str(tmp_path / f"{name}_ckpt"),
+        )
+        assert rows(state) == want, name
+
+
+def test_merge_sink_adopts_pre_manifest_state_root(spark, tmp_path):
+    """A state root written before state roots were manifest roots — a
+    ``_state_manifest.json`` (retained ``versions`` + fencing ``epoch``)
+    beside ``state_v{N}`` dirs — is adopted by a new sink: it resumes on
+    the newest retained version with its state intact, fences the old
+    writer's epoch, trusts the old manifest over the listing (an
+    uncommitted ``state_v`` dir of a fenced writer is not state), and
+    retention prunes the adopted dirs like its own."""
+    import json
+    from datetime import datetime
+    from decimal import Decimal as D
+
+    from mapreduce_framework_spark.storage import (
+        check_index_epoch,
+        latest_delta,
+        read_index_manifest,
+    )
+    from mapreduce_framework_spark.streaming.foreach_batch import (
+        make_kv_merge_batch_fn,
+        make_rollup_merge_batch_fn,
+    )
+
+    h, t = datetime(2024, 1, 1, 10), datetime(2024, 1, 1, 10, 5)
+    state_schema = "h timestamp_ntz, event_type string, cnt long, val decimal(38,6)"
+    cases = {
+        "kv": (
+            make_kv_merge_batch_fn, _KV_SCHEMA, "key string, value string",
+            _kv_rows,
+            [("a", "x"), ("b", "5")],  # committed state after batch 4
+            [("a", "stale")],  # batch 3, retained
+            [("zombie", "7")],  # batch 5, written but never committed
+            [(t, 1, "a", "append", "y")],
+            {("a", "xy"), ("b", "5")},
+        ),
+        "rollup": (
+            make_rollup_merge_batch_fn, _EV_SCHEMA, state_schema, _rollup_rows,
+            [(h, "a", 4, D(10)), (h, "b", 1, D(5))],
+            [(h, "a", 1, D(1))],
+            [(h, "zombie", 1, D(7))],
+            [(t, "a", 6.0)],
+            {("a", 5, 16.0), ("b", 1, 5.0)},
+        ),
+    }
+    for name, (make, schema, st_schema, rows, v4, v3, v5, batch, want) in cases.items():
+        root = tmp_path / f"{name}_state"
+        for v, data in ((3, v3), (4, v4), (5, v5)):
+            spark.createDataFrame(data, st_schema).write.parquet(
+                str(root / f"state_v{v}")
+            )
+        (root / "_state_manifest.json").write_text(
+            json.dumps({"version": 1, "versions": [3, 4], "epoch": 2})
+        )
+        root = str(root)
+
+        fn = make(spark, root)
+        check_index_epoch(root, 3)  # acquisition bumped past the old owner
+        assert rows(latest_delta(spark, root, before_batch=5)) == rows(
+            spark.createDataFrame(v4, st_schema)
+        )
+        fn(spark.createDataFrame(batch, schema), 5)
+
+        assert rows(latest_delta(spark, root)) == want, name
+        man = read_index_manifest(root)
+        assert man["deltas"] == [[4, "state_v4"], [5, "delta_v5_e3"]]
+        assert sorted(d for d in os.listdir(root) if not d.startswith("_")) == [
+            "delta_v5_e3",
+            "state_v4",
+        ]
 
 
 @pytest.mark.slow  # r14 item 2: equality soak; decisions oracle-checked by the q94-q110 replays
@@ -3244,10 +3384,8 @@ def test_fp_distinct_cascade_decisions_identical(spark, sf_dir, tmp_path):
     and the compacted fp root carries one row per fingerprint."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.storage import read_index_manifest
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_cascade_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_cascade_ingest_batch_fn
 
     b0, b1 = _cascade_batches(spark, sf_dir)
     # a third batch re-fetching batch-0 docs AGAIN exercises matching
@@ -3281,12 +3419,12 @@ def test_fp_distinct_cascade_decisions_identical(spark, sf_dir, tmp_path):
     fp_root = str(tmp_path / "fd_on" / "fp")
     man = read_index_manifest(fp_root)
     assert man["compacted_path"] is not None
-    fps = _index_so_far(spark, fp_root)
+    fps = index_so_far(spark, fp_root)
     assert (
         fps.groupBy("fp").count().agg(F.max("count")).collect()[0][0] == 1
     )
     # the full root keeps per-doc rows (it is the doc_id -> fp lookup)
-    fps_full = _index_so_far(spark, str(tmp_path / "fd_off" / "fp"))
+    fps_full = index_so_far(spark, str(tmp_path / "fd_off" / "fp"))
     assert fps_full.count() >= fps.count()
 
 
@@ -3526,8 +3664,8 @@ def test_decontamination_tier(spark, tmp_path):
         span_contamination,
         span_index,
     )
+    from mapreduce_framework_spark.storage import index_so_far
     from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
         admission_report,
         make_full_cascade_ingest_batch_fn,
     )
@@ -3615,7 +3753,7 @@ def test_decontamination_tier(spark, tmp_path):
 
     # the contaminated doc is indexed NOWHERE (dup rejects' rule applies)
     for root in ("fp", "sig"):
-        idx = _index_so_far(spark, str(tmp_path / "ct_on" / root))
+        idx = index_so_far(spark, str(tmp_path / "ct_on" / root))
         assert idx.where(F.col("doc_id") == 11).count() == 0
     # and the ops rollup surfaces the new outcome unchanged
     rep = {
@@ -3723,7 +3861,7 @@ def test_full_cascade_media_dup_tier(spark, tmp_path):
     catch this reject class."""
     from pyspark.sql import Row
 
-    from mapreduce_framework_spark.streaming.ingest import _index_so_far
+    from mapreduce_framework_spark.storage import index_so_far
 
     cents = spark.createDataFrame(
         [Row(cent_id=i, cent=[float(x) for x in v])
@@ -3766,7 +3904,7 @@ def test_full_cascade_media_dup_tier(spark, tmp_path):
     }
     # the phash index holds exactly the admitted docs WITH pixels —
     # no rejects, no NULL-text doc 12
-    ph_ids = {r["doc_id"] for r in _index_so_far(spark, ph_root).collect()}
+    ph_ids = {r["doc_id"] for r in index_so_far(spark, ph_root).collect()}
     assert ph_ids == {1, 2, 13}
 
     # (e) default-off control on the identical batches
@@ -3795,10 +3933,8 @@ def test_lexical_cascade_media_dup_tier(spark, tmp_path):
     from pyspark.sql import Row
 
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_cascade_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_cascade_ingest_batch_fn
 
     A = "alpha beta gamma delta epsilon"
     C = "red orange yellow green blue"
@@ -3843,7 +3979,7 @@ def test_lexical_cascade_media_dup_tier(spark, tmp_path):
         20: (False, "media_dup", 1, 1.0),    # 11 was never indexed
         21: (False, "exact", 13, 1.0),       # 13 was indexed
     }
-    ph_ids = {r["doc_id"] for r in _index_so_far(spark, ph_root).collect()}
+    ph_ids = {r["doc_id"] for r in index_so_far(spark, ph_root).collect()}
     assert ph_ids == {1, 2, 13}
 
     # default-off control on the identical batches
@@ -3932,7 +4068,7 @@ def test_phash_index_config_stamp_and_width_mismatch_fails(spark, tmp_path):
 @pytest.mark.parametrize("sink", ["lexical", "semantic"])
 def test_phash_width_mismatch_fails_even_at_batch_zero(spark, tmp_path, sink):
     """Round-13 (round-12 ADVICE): the width check must run UNCONDITIONALLY
-    at the top of apply_batch, not only once _index_so_far returns a loaded
+    at the top of apply_batch, not only once index_so_far returns a loaded
     index. A sink restarted at batch 0 over an EXISTING never-compacted
     root sees no visible index (before_batch=0 covers nothing), and a
     load-gated check would let it publish a new-width delta into the
@@ -4023,10 +4159,8 @@ def test_phash_width_is_a_sink_parameter(spark, tmp_path):
     get silently wrong in either direction."""
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
     from mapreduce_framework_spark.storage import read_index_manifest
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_cascade_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_cascade_ingest_batch_fn
     from pyspark.sql import Row
 
     base = (
@@ -4053,7 +4187,7 @@ def test_phash_width_is_a_sink_parameter(spark, tmp_path):
     fn(batch([(2, retouch), (3, base[::-1])]), 1)
     dec = {
         r["doc_id"]: (r["admitted"], r["tier"], r["matched_id"], r["jaccard"])
-        for r in _index_so_far(spark, roots["dec"]).collect()
+        for r in index_so_far(spark, roots["dec"]).collect()
     }
     admitted, tier, matched, sim = dec[2]
     assert (admitted, tier, matched) == (False, "media_dup", 1)

@@ -590,10 +590,8 @@ def probe_ingest_compaction(spark, base, n_batches=64, compact_every=16) -> None
     import tempfile
 
     from mapreduce_framework_spark.pipeline.dedup import JACCARD_THRESHOLD
-    from mapreduce_framework_spark.streaming.ingest import (
-        _index_so_far,
-        make_ingest_batch_fn,
-    )
+    from mapreduce_framework_spark.storage import index_so_far
+    from mapreduce_framework_spark.streaming.ingest import make_ingest_batch_fn
 
     batch0 = base.orderBy("doc_id").limit(50).localCheckpoint(eager=True)
     print(f"| lifecycle | batches | last-8 sink wall/batch | final index read | dirs | files |")
@@ -616,7 +614,7 @@ def probe_ingest_compaction(spark, base, n_batches=64, compact_every=16) -> None
                 t0 = time.perf_counter()
                 fn(b, i)
                 walls.append(time.perf_counter() - t0)
-            t_read, _ = timed(_index_so_far(spark, os.path.join(root, "index")))
+            t_read, _ = timed(index_so_far(spark, os.path.join(root, "index")))
             idx_root = os.path.join(root, "index")
             dirs = [d for d in os.listdir(idx_root) if os.path.isdir(os.path.join(idx_root, d))]
             files = sum(
